@@ -3,6 +3,7 @@ package graft
 import graft.cluster.ConnectedComponents
 import graft.fixtures.AddressFixture
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator.Block
 import graft.normalize.Normalizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -323,7 +324,7 @@ object Bench {
     * shape, where matching reads the committed normalize snapshot. */
   private def transcriptMatch(s: SparkSession, dir: String): Long = {
     val conv = SparkEntryBench.convNormV(s, dir, variants = 12).cache()
-    try Matcher.matchPairs(
+    try Matcher.run(Block(),
       conv.filter(col("variant") === 0),
       conv.filter(col("variant") > 0),
       MatchConfig.reference.copy(saltBuckets = 8),
@@ -347,8 +348,8 @@ object Bench {
       consume: DataFrame => Long = _.count()): Long = {
     val lhs = SparkEntry.addrNorm(AddressFixture.left(s, dir)).cache()
     val rhs = SparkEntry.addrNorm(AddressFixture.rightAll(s, dir)).cache()
-    try consume(Matcher.matchPairs(lhs, rhs, addrSaltedCfg,
-      idCol = "id", textCol = "address_norm", hasGeo = true))
+    try consume(Matcher.run(Block(hasGeo = true), lhs, rhs, addrSaltedCfg,
+      idCol = "id", textCol = "address_norm"))
     finally { lhs.unpersist(); rhs.unpersist() }
   }
 
@@ -405,7 +406,7 @@ object Bench {
     * min-of-N throughput phase already reports. */
   private def warmupSuite(s: SparkSession, dir: String): Unit = {
     val conv = SparkEntryBench.convNormV(s, dir, variants = 2).cache()
-    try Matcher.matchPairs(
+    try Matcher.run(Block(),
       conv.filter(col("variant") === 0).limit(500),
       conv.filter(col("variant") > 0).limit(1500),
       MatchConfig.reference.copy(saltBuckets = 8),
@@ -463,7 +464,7 @@ object Bench {
     // at normalize-commit time in the pipeline), untimed here
     val hot = Matcher.hotBlockKeys(lhs, rhs, cfg, textCol = "text_norm")
     val cfgStats = cfg.copy(knownHotKeys = Some(hot))
-    def job(): Long = Matcher.matchPairs(lhs, rhs, cfgStats,
+    def job(): Long = Matcher.run(Block(), lhs, rhs, cfgStats,
       idCol = "conv_id", textCol = "text_norm").count()
     if (warm) job()
     val sec = (0 until math.max(1, runs)).map(_ => time(job())._2).min
@@ -500,7 +501,7 @@ object Bench {
       java.nio.charset.StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty).toSeq
     val cfg = MatchConfig.reference.copy(blockBy = "digits+prefix10",
       saltBuckets = 8, knownHotKeys = Some(hot))
-    def job(): Long = Matcher.matchPairs(lhs, rhs, cfg,
+    def job(): Long = Matcher.run(Block(), lhs, rhs, cfg,
       idCol = "conv_id", textCol = "text_norm").count()
     // WORK-ONLY timing: an untimed small-subset pass through the exact
     // job first (same cfg, same plan shape) warms JIT + Janino codegen
@@ -509,7 +510,7 @@ object Bench {
     // were otherwise startup-dominated and could only report overhead
     // ratios. Failures here are ignored: the warmup is an optimization
     // of the measurement, never a gate on it.
-    try Matcher.matchPairs(lhs.limit(400), rhs.limit(1200), cfg,
+    try Matcher.run(Block(), lhs.limit(400), rhs.limit(1200), cfg,
       idCol = "conv_id", textCol = "text_norm").count()
     catch { case _: Exception => () }
     val sec = (0 until math.max(1, runs)).map(_ => time(job())._2).min

@@ -3,6 +3,7 @@ package graft
 import graft.cluster.ConnectedComponents
 import graft.fixtures.AddressFixture
 import graft.matching.Matcher
+import graft.matching.CandidateGenerator.Block
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   * plans/r06 deliverable. Timings here inform OPTIMIZATION_r06.md; the
   * driver-comparable numbers stay Bench's.
   *
-  * Usage: `sbt "runMain graft.BenchExtra [stages|plans] [outDir]"`.
+  * Usage: `sbt "runMain graft.BenchExtra [stages|plans] [outDir] [tag]"`.
   */
 object BenchExtra {
 
@@ -71,7 +72,7 @@ object BenchExtra {
     // small warmup of scan+codegen paths so stage timings aren't JIT-dominated
     time("warmup (small match)") {
       val conv = SparkEntryBench.convNormV(s, dir, variants = 2).cache()
-      try Matcher.matchPairs(
+      try Matcher.run(Block(),
         conv.filter(col("variant") === 0).limit(500),
         conv.filter(col("variant") > 0).limit(1500),
         graft.matching.MatchConfig.reference.copy(saltBuckets = 8),
@@ -89,7 +90,7 @@ object BenchExtra {
     System.err.println(s"[extra] tsr conv cached partitions = ${convC.rdd.getNumPartitions}")
     s.sparkContext.setJobDescription("tsr: match over cached corpus")
     time("tsr: match (cached corpus)") {
-      Matcher.matchPairs(
+      Matcher.run(Block(),
         convC.filter(col("variant") === 0),
         convC.filter(col("variant") > 0),
         graft.matching.MatchConfig.reference.copy(saltBuckets = 8),
@@ -105,8 +106,8 @@ object BenchExtra {
     val lhs = lhs0.cache(); val rhs = rhs0.cache()
     time("addr: cache materialize") { lhs.count() + rhs.count() }
     s.sparkContext.setJobDescription("addr: match over cached sides")
-    val m = Matcher.matchPairs(lhs, rhs, Bench.addrSaltedCfg,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val m = Matcher.run(Block(hasGeo = true), lhs, rhs, Bench.addrSaltedCfg,
+      idCol = "id", textCol = "address_norm")
     time("addr: match (cached sides)") { m.count() }
     s.sparkContext.setJobDescription("addr: cc over match output")
     time("addr: cc (match recomputed + cc)") {
@@ -186,7 +187,7 @@ object BenchExtra {
     for (r <- 1 to 2) {
       s.sparkContext.setJobDescription(s"thrx run $r")
       time(s"throughput match (run $r)") {
-        Matcher.matchPairs(lhs, rhs, cfgStats,
+        Matcher.run(Block(), lhs, rhs, cfgStats,
           idCol = "conv_id", textCol = "text_norm").count()
       }
     }
@@ -322,8 +323,8 @@ object BenchExtra {
     time("warmup (small addr match)") {
       val l = SparkEntry.addrNorm(AddressFixture.left(s, dir)).limit(2000).cache()
       val r = SparkEntry.addrNorm(AddressFixture.rightAll(s, dir)).limit(4000).cache()
-      Matcher.matchPairs(l, r, Bench.addrSaltedCfg,
-        idCol = "id", textCol = "address_norm", hasGeo = true).count()
+      Matcher.run(Block(hasGeo = true), l, r, Bench.addrSaltedCfg,
+        idCol = "id", textCol = "address_norm").count()
       l.unpersist(); r.unpersist()
     }
     val lhs = SparkEntry.addrNorm(AddressFixture.left(s, dir)).cache()
@@ -341,18 +342,18 @@ object BenchExtra {
     time("scoredPairs only (no topk)") { sp.count() }
     System.err.println("[extra] scoredPairs FINAL plan:\n" +
       sp.queryExecution.executedPlan.toString.linesIterator.take(80).mkString("\n"))
-    time("full matchPairs") {
-      Matcher.matchPairs(lhs, rhs, Bench.addrSaltedCfg,
-        idCol = "id", textCol = "address_norm", hasGeo = true).count()
+    time("full match") {
+      Matcher.run(Block(hasGeo = true), lhs, rhs, Bench.addrSaltedCfg,
+        idCol = "id", textCol = "address_norm").count()
     }
-    time("full matchPairs (2nd)") {
-      Matcher.matchPairs(lhs, rhs, Bench.addrSaltedCfg,
-        idCol = "id", textCol = "address_norm", hasGeo = true).count()
+    time("full match (2nd)") {
+      Matcher.run(Block(hasGeo = true), lhs, rhs, Bench.addrSaltedCfg,
+        idCol = "id", textCol = "address_norm").count()
     }
     val cfgNoSalt = Bench.addrSaltedCfg.copy(saltBuckets = 0)
-    time("matchPairs unsalted (AQE skew only)") {
-      Matcher.matchPairs(lhs, rhs, cfgNoSalt,
-        idCol = "id", textCol = "address_norm", hasGeo = true).count()
+    time("match unsalted (AQE skew only)") {
+      Matcher.run(Block(hasGeo = true), lhs, rhs, cfgNoSalt,
+        idCol = "id", textCol = "address_norm").count()
     }
     lhs.unpersist(); rhs.unpersist()
   }
@@ -389,7 +390,8 @@ object BenchExtra {
     canon(small)
   }
 
-  /** Dump `.explain("formatted")` for the eight suite queries into
+  /** Dump `.explain("formatted")` for the eight suite queries and every
+    * matcher query of [[SparkEntry.queries]] into
     * `<outDir>/<name>_<tag>.txt` (tag = before|after). */
   private def dumpPlans(s: SparkSession, dir: String, outDir: String, tag: String): Unit = {
     val out = java.nio.file.Paths.get(outDir)
@@ -421,8 +423,8 @@ object BenchExtra {
       eagerResult = false))
     val lhs = SparkEntry.addrNorm(AddressFixture.left(s, dir))
     val rhs = SparkEntry.addrNorm(AddressFixture.rightAll(s, dir))
-    val m = Matcher.matchPairs(lhs, rhs, Bench.addrSaltedCfg,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val m = Matcher.run(Block(hasGeo = true), lhs, rhs, Bench.addrSaltedCfg,
+      idCol = "id", textCol = "address_norm")
     dump("match_addr_lev", m)
     // CC is iterative (no single static plan): dump one large-star/
     // small-star round's plan over the canonical match edge set — the
@@ -433,7 +435,7 @@ object BenchExtra {
       if (tag == "before") legacyCcRound(ccEdges)
       else ConnectedComponents.oneRound(ccEdges))
     val conv = SparkEntryBench.convNormV(s, dir, variants = 12)
-    dump("match_transcripts_tsr", Matcher.matchPairs(
+    dump("match_transcripts_tsr", Matcher.run(Block(),
       conv.filter(col("variant") === 0),
       conv.filter(col("variant") > 0),
       graft.matching.MatchConfig.reference.copy(saltBuckets = 8),
@@ -444,5 +446,10 @@ object BenchExtra {
       convS.filter(col("variant") > 0),
       minOverlap = 30, idCol = "conv_id", textCol = "text_norm",
       eagerResult = false))
+    // every driver query that runs the matcher (m_match_*, a_match_*,
+    // m_unmatched_*, ...), under its query name — the plan-identity
+    // check for matcher refactors (tools/plan_diff.py)
+    SparkEntry.queries.keys.filter(_.contains("match")).toSeq.sorted
+      .foreach(q => dump(q, SparkEntry.queries(q)(s, dir)))
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator.Block
 
 /** Throwaway diagnostic: measures what the Bloom block-key pregate
   * ([[graft.blocking.BloomPregate]]) actually saves on the asymmetric
@@ -57,7 +58,7 @@ object BloomTime {
         run <- 1 to 2) {
       shuffleBytes.set(0); shuffleRecs.set(0)
       val t0 = System.nanoTime()
-      val n = Matcher.matchPairs(probe, corpus, cfg,
+      val n = Matcher.run(Block(), probe, corpus, cfg,
         idCol = "conv_id", textCol = "text_norm").count()
       // wall time captured BEFORE the metric-settle polling below — the
       // poll sleeps must not leak into the off-vs-on comparison

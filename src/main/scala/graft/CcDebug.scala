@@ -3,10 +3,11 @@ package graft
 import graft.cluster.ConnectedComponents
 import graft.fixtures.AddressFixture
 import graft.matching.Matcher
+import graft.matching.CandidateGenerator.Block
 
 /** Scratch diagnostics for clusters_cc tuning (not part of the driver
   * contract): materializes the match edges untimed, then times the CC
-  * loop alone with GRAFT_CC_DEBUG round lines. */
+  * loop alone. */
 object CcDebug {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -15,11 +16,11 @@ object CcDebug {
     // runs, or its stage split explains a different plan
     val s = Bench.session(32)
     s.sparkContext.setLogLevel("WARN")
-    val matches = Matcher.matchPairs(
+    val matches = Matcher.run(Block(hasGeo = true),
       SparkEntry.addrNorm(AddressFixture.left(s, dir)),
       SparkEntry.addrNorm(AddressFixture.rightAll(s, dir)),
       Bench.addrSaltedCfg,
-      idCol = "id", textCol = "address_norm", hasGeo = true).cache()
+      idCol = "id", textCol = "address_norm").cache()
     val t0 = System.nanoTime()
     val m = matches.count()
     val tMatch = (System.nanoTime() - t0) / 1e9

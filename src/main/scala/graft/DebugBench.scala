@@ -1,6 +1,7 @@
 package graft
 
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator.Block
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -54,7 +55,7 @@ object DebugBench {
     val cfg = MatchConfig.reference.copy(blockBy = "digits+prefix10", saltBuckets = 8)
     val hot = Matcher.hotBlockKeys(lhs, rhs, cfg, textCol = "text_norm")
     val cfgStats = cfg.copy(knownHotKeys = Some(hot))
-    def job(): Long = Matcher.matchPairs(lhs, rhs, cfgStats,
+    def job(): Long = Matcher.run(Block(), lhs, rhs, cfgStats,
       idCol = "conv_id", textCol = "text_norm").count()
     println("=== matches: " + job()) // warmup
     Thread.sleep(500)

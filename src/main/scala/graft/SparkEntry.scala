@@ -4,6 +4,7 @@ import graft.blocking.BlockKeys
 import graft.cluster.{ClusterMetrics, ConnectedComponents}
 import graft.fixtures.AddressFixture
 import graft.matching.{FellegiSunter, MatchConfig, Matcher}
+import graft.matching.CandidateGenerator.{Block, Lsh, SetSim, SortedNeighborhood, Union}
 import graft.normalize.Normalizer
 import graft.similarity.Scores
 import graft.transcripts.Transcripts
@@ -58,7 +59,7 @@ object SparkEntry {
   def matchJw(s: SparkSession, dir: String): DataFrame = {
     val conv = convNorm(s, dir).cache()
     val cfg = MatchConfig.reference.copy(scorer = "jaro_winkler")
-    Matcher.matchPairs(
+    Matcher.run(Block(),
       conv.filter(col("variant") === 0),
       conv.filter(col("variant") > 0),
       cfg, idCol = "conv_id", textCol = "text_norm")
@@ -366,21 +367,20 @@ object SparkEntry {
     df.withColumn("address_norm", Normalizer.normalizeAddress(col("address")))
 
   def addrMatchLev(s: SparkSession, dir: String): DataFrame =
-    Matcher.matchPairs(
+    Matcher.run(Block(hasGeo = true),
       addrNorm(AddressFixture.left(s, dir)),
       addrNorm(AddressFixture.rightAll(s, dir)),
-      addrCfg, idCol = "id", textCol = "address_norm", hasGeo = true)
+      addrCfg, idCol = "id", textCol = "address_norm")
 
   /** Same full match with the transposition-tolerant `dl_ratio` scorer
     * (true Damerau-Levenshtein, codegen'd [[graft.similarity.DamerauLevenshtein]])
     * — swapped-adjacent-character typos cost 1 edit instead of 2, the
     * classic record-linkage upgrade over plain Levenshtein. */
   def addrMatchDl(s: SparkSession, dir: String): DataFrame =
-    Matcher.matchPairs(
+    Matcher.run(Block(hasGeo = true),
       addrNorm(AddressFixture.left(s, dir)),
       addrNorm(AddressFixture.rightAll(s, dir)),
-      addrCfg.copy(scorer = "dl_ratio"), idCol = "id", textCol = "address_norm",
-      hasGeo = true)
+      addrCfg.copy(scorer = "dl_ratio"), idCol = "id", textCol = "address_norm")
 
   /** Same full match blocked by the PHONETIC key (J36, classic
     * Soundex of the first alphabetic run): sound-alike mahalle names
@@ -388,11 +388,11 @@ object SparkEntry {
     * the complement of the prefix family (first-edit-blind) and LSH
     * bands (shingle-mass-driven). */
   def addrMatchPhonetic(s: SparkSession, dir: String): DataFrame =
-    Matcher.matchPairs(
+    Matcher.run(Block(hasGeo = true),
       addrNorm(AddressFixture.left(s, dir)),
       addrNorm(AddressFixture.rightAll(s, dir)),
       addrCfg.copy(blockBy = "phonetic"), idCol = "id",
-      textCol = "address_norm", hasGeo = true)
+      textCol = "address_norm")
 
   /** Single-table dedup linkage (D10): the matcher run against ITSELF
     * over the address right corpus (which holds the r-/s-variants of
@@ -696,7 +696,7 @@ object SparkEntry {
     * topk, end to end. */
   def entry(spark: SparkSession): DataFrame = {
     val conv = convNorm(spark, "/root/testdata/sf0.001").cache()
-    Matcher.matchPairs(
+    Matcher.run(Block(),
       conv.filter(col("variant") === 0),
       conv.filter(col("variant") > 0),
       MatchConfig.reference, idCol = "conv_id", textCol = "text_norm")
@@ -721,7 +721,7 @@ object SparkEntry {
       convNorm(s, dir).select(col("conv_id"),
         array_join(graft.similarity.FuzzFunctions.sortedTokenSet(col("text_norm")), " ")
           .as("tokset"))),
-    // (b) the full flagship matchPairs path (TokenSetRatioPreTok
+    // (b) the full flagship block-key match path (TokenSetRatioPreTok
     // in-plan) at threshold 0 = every blocked candidate pair, with the
     // score INDEPENDENTLY recomputed via the scalar TokenSetRatio
     // expression + a fresh digits score — `tsr_agree` must be 1 on
@@ -729,7 +729,7 @@ object SparkEntry {
     // the scalar-vs-pretok equality is the second-path score check).
     "m_match_tsr_agree" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      val all = Matcher.matchPairs(
+      val all = Matcher.run(Block(),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(threshold = 0, topk = Int.MaxValue),
@@ -768,7 +768,7 @@ object SparkEntry {
     // exactness proof that the sketch admits every true candidate.
     "m_match_bloom" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairs(
+      Matcher.run(Block(),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler", bloomPregateItems = 65536L),
@@ -780,7 +780,7 @@ object SparkEntry {
     // shingles instead of a shared prefix key.
     "m_match_lsh" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsLshBlocked(
+      Matcher.run(Lsh(),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
@@ -792,18 +792,18 @@ object SparkEntry {
     // bands), same scorer/threshold/topk chain.
     "m_match_setsim" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsSetSimBlocked(
+      Matcher.run(SetSim(minSim = 0.5),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
-        idCol = "conv_id", textCol = "text_norm", minSim = 0.5)
+        idCol = "conv_id", textCol = "text_norm")
     }),
     // FULL composite: block key ∪ LSH bands ∪ exact set-sim join in
     // one ranking — the engine's highest-recall candidate set (the
     // three families fail independently).
     "m_match_comp3" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsCompositeFull(
+      Matcher.run(Union(Block(), Lsh(), SetSim()),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
@@ -820,19 +820,18 @@ object SparkEntry {
         lit(false))
       val l = conv.filter(col("variant") === 0)
       val r = conv.filter(col("variant") > 0)
-      val prior = Matcher.matchPairsSetSimBlocked(
+      val prior = Matcher.run(SetSim(minSim = 0.5),
         l.filter(isOld), r.filter(isOld), cfgJw,
-        idCol = "conv_id", textCol = "text_norm", minSim = 0.5)
-      Matcher.matchPairsIncrementalSetSim(
+        idCol = "conv_id", textCol = "text_norm")
+      Matcher.incremental(SetSim(minSim = 0.5),
         l.filter(isOld), l.filter(not(isOld)),
         r.filter(isOld), r.filter(not(isOld)),
-        prior, cfgJw, idCol = "conv_id", textCol = "text_norm", minSim = 0.5)
+        prior, cfgJw, idCol = "conv_id", textCol = "text_norm")
     }),
     // Incremental fold over the FULL three-generator composite —
     // block ∪ LSH ∪ set-sim candidacy is a union of per-pair
     // predicates, so incremental == full and the oracle is the
-    // m_match_comp3 SQL verbatim (Matcher
-    // .matchPairsIncrementalCompositeFull scaladoc).
+    // m_match_comp3 SQL verbatim (Matcher.incremental scaladoc).
     "m_match_comp3_incr" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
       val cfgJw = MatchConfig.reference.copy(scorer = "jaro_winkler")
@@ -841,10 +840,10 @@ object SparkEntry {
         lit(false))
       val l = conv.filter(col("variant") === 0)
       val r = conv.filter(col("variant") > 0)
-      val prior = Matcher.matchPairsCompositeFull(
+      val prior = Matcher.run(Union(Block(), Lsh(), SetSim()),
         l.filter(isOld), r.filter(isOld), cfgJw,
         idCol = "conv_id", textCol = "text_norm")
-      Matcher.matchPairsIncrementalCompositeFull(
+      Matcher.incremental(Union(Block(), Lsh(), SetSim()),
         l.filter(isOld), l.filter(not(isOld)),
         r.filter(isOld), r.filter(not(isOld)),
         prior, cfgJw, idCol = "conv_id", textCol = "text_norm")
@@ -854,19 +853,17 @@ object SparkEntry {
     // reading).
     "m_match_lsh_tok" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsLshBlocked(
+      Matcher.run(Lsh(shingleK = 2, shingleMode = "token"),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
-        idCol = "conv_id", textCol = "text_norm",
-        shingleK = 2, shingleMode = "token")
+        idCol = "conv_id", textCol = "text_norm")
     }),
     // Incremental re-match over the LSH-banded generator: conv corpus
     // split by entity parity, prior = full LSH match of the old halves,
     // fold = new-vs-all + old-vs-new LSH legs + prior, ranked once. The
     // oracle is the FULL LSH-match SQL verbatim — equality IS the
-    // incremental-exactness proof (Matcher.matchPairsIncrementalLsh
-    // scaladoc).
+    // incremental-exactness proof (Matcher.incremental scaladoc).
     "m_match_lsh_incr" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
       val cfgJw = MatchConfig.reference.copy(scorer = "jaro_winkler")
@@ -875,10 +872,10 @@ object SparkEntry {
         lit(false))
       val l = conv.filter(col("variant") === 0)
       val r = conv.filter(col("variant") > 0)
-      val prior = Matcher.matchPairsLshBlocked(
+      val prior = Matcher.run(Lsh(),
         l.filter(isOld), r.filter(isOld), cfgJw,
         idCol = "conv_id", textCol = "text_norm")
-      Matcher.matchPairsIncrementalLsh(
+      Matcher.incremental(Lsh(),
         l.filter(isOld), l.filter(not(isOld)),
         r.filter(isOld), r.filter(not(isOld)),
         prior, cfgJw, idCol = "conv_id", textCol = "text_norm")
@@ -920,23 +917,24 @@ object SparkEntry {
     // (window-1)*N regardless of value skew.
     "m_match_sn" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsSortedNeighborhood(
+      Matcher.run(SortedNeighborhood(window = 10),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
-        idCol = "conv_id", textCol = "text_norm", window = 10)
+        idCol = "conv_id", textCol = "text_norm")
     }),
     // Multi-pass sorted neighborhood (the production merge/purge
     // shape): forward text order + reversed-text order, candidates
     // unioned, one ranking.
     "m_match_sn_mp" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsSortedNeighborhoodMultiPass(
+      Matcher.run(
+        SortedNeighborhood(window = 10,
+          sortKeys = Seq(identity, (c: Column) => reverse(c))),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
-        sortKeys = Seq(identity, (c: Column) => reverse(c)),
-        idCol = "conv_id", textCol = "text_norm", window = 10)
+        idCol = "conv_id", textCol = "text_norm")
     }),
     // Sorted-neighborhood pass ordered by the PHONETIC key (J26 × J36,
     // the classic merge/purge pass choice): sound-alike first tokens
@@ -944,12 +942,13 @@ object SparkEntry {
     // the text and reversed-text passes sort far apart.
     "m_match_sn_ph" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsSortedNeighborhoodMultiPass(
+      Matcher.run(
+        SortedNeighborhood(window = 10,
+          sortKeys = Seq((c: Column) => graft.blocking.BlockKeys.phoneticKey(c))),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
-        sortKeys = Seq((c: Column) => graft.blocking.BlockKeys.phoneticKey(c)),
-        idCol = "conv_id", textCol = "text_norm", window = 10)
+        idCol = "conv_id", textCol = "text_norm")
     }),
     // J6 scorer family: symmetric Monge-Elkan hybrid (token-level
     // best-match alignment, Jaro-Winkler inside tokens) over the
@@ -958,7 +957,7 @@ object SparkEntry {
     // jaro_winkler for reordered/partially-misspelled text.
     "m_match_me" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairs(
+      Matcher.run(Block(),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "monge_elkan"),
@@ -1057,7 +1056,7 @@ object SparkEntry {
     // candidates UNION band candidates, one ranking over both.
     "m_match_comp" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
-      Matcher.matchPairsComposite(
+      Matcher.run(Union(Block(), Lsh()),
         conv.filter(col("variant") === 0),
         conv.filter(col("variant") > 0),
         MatchConfig.reference.copy(scorer = "jaro_winkler"),
@@ -1066,8 +1065,7 @@ object SparkEntry {
     // Incremental re-match over the COMPOSITE generator (block ∪ band),
     // same entity-parity split as m_match_lsh_incr; the oracle is the
     // full composite-match SQL verbatim — equality IS the
-    // incremental-exactness proof (Matcher.matchPairsIncrementalComposite
-    // scaladoc).
+    // incremental-exactness proof (Matcher.incremental scaladoc).
     "m_match_comp_incr" -> ((s, dir) => {
       val conv = convNorm(s, dir).cache()
       val cfgJw = MatchConfig.reference.copy(scorer = "jaro_winkler")
@@ -1076,10 +1074,10 @@ object SparkEntry {
         lit(false))
       val l = conv.filter(col("variant") === 0)
       val r = conv.filter(col("variant") > 0)
-      val prior = Matcher.matchPairsComposite(
+      val prior = Matcher.run(Union(Block(), Lsh()),
         l.filter(isOld), r.filter(isOld), cfgJw,
         idCol = "conv_id", textCol = "text_norm")
-      Matcher.matchPairsIncrementalComposite(
+      Matcher.incremental(Union(Block(), Lsh()),
         l.filter(isOld), l.filter(not(isOld)),
         r.filter(isOld), r.filter(not(isOld)),
         prior, cfgJw, idCol = "conv_id", textCol = "text_norm")
@@ -1147,7 +1145,7 @@ object SparkEntry {
     // half and a "new" increment, score only new×all and old×new, and
     // re-rank the union with the prior old×old top-k snapshot. The
     // result is provably identical to the full match
-    // (Matcher.matchPairsIncremental scaladoc), so the oracle is the
+    // (Matcher.incremental scaladoc), so the oracle is the
     // SAME full-match SQL as a_match_lev — the strongest check the
     // driver can run on an incremental path.
     "a_match_incr" -> ((s, dir) => {
@@ -1161,12 +1159,12 @@ object SparkEntry {
         expr("try_cast(regexp_extract(id, '([0-9]+)', 1) AS BIGINT) % 2 = 0"), lit(false))
       val l = addrNorm(AddressFixture.left(s, dir))
       val r = addrNorm(AddressFixture.rightAll(s, dir))
-      val prior = Matcher.matchPairs(l.filter(isOld), r.filter(isOld), addrCfg,
-        idCol = "id", textCol = "address_norm", hasGeo = true)
-      Matcher.matchPairsIncremental(
+      val prior = Matcher.run(Block(hasGeo = true), l.filter(isOld), r.filter(isOld), addrCfg,
+        idCol = "id", textCol = "address_norm")
+      Matcher.incremental(Block(hasGeo = true),
         l.filter(isOld), l.filter(not(isOld)),
         r.filter(isOld), r.filter(not(isOld)),
-        prior, addrCfg, idCol = "id", textCol = "address_norm", hasGeo = true)
+        prior, addrCfg, idCol = "id", textCol = "address_norm")
     }),
     // J30 exact edit-distance threshold join (q-gram prefix filtering,
     // Ed-Join style): every pair within levenshtein 3, left side

@@ -1,6 +1,7 @@
 package graft
 
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator.Block
 
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ object TsrDebug {
       val conv = SparkEntryBench.convNormV(s, dir, variants = 12).cache()
       t("conv cache fill") { conv.count() }
       t("match over cached conv") {
-        Matcher.matchPairs(
+        Matcher.run(Block(),
           conv.filter(col("variant") === 0),
           conv.filter(col("variant") > 0),
           MatchConfig.reference.copy(saltBuckets = 8),

@@ -175,18 +175,11 @@ object ConnectedComponents {
         case _ => df.localCheckpoint(false)
       }
 
-    // optional round-level diagnostics (GRAFT_CC_DEBUG=1): one stderr
-    // line per round with edge count + wall — the first thing to look
-    // at when clustering wall time surprises at any scale
-    val debug = sys.env.get("GRAFT_CC_DEBUG").exists(_ == "1")
-
     var sig = sig0
     var converged = false
     var iter = 0
     val cadence = math.max(1, checkEvery)
     while (!converged && iter < maxIter) {
-      val jobT0 = System.nanoTime()
-      val iterBefore = iter
       var cur = e
       var k0 = 0
       while (k0 < cadence && iter + k0 < maxIter) {
@@ -212,8 +205,6 @@ object ConnectedComponents {
       sig = newSig
       hygiene.advance()
       e = e2
-      if (debug) System.err.println(
-        f"[cc] rounds $iter%d (+${iter - iterBefore}%d): edges=${newSig._1}%d wall=${(System.nanoTime() - jobT0) / 1e9}%.2fs converged=$converged%b")
     }
 
     // A maxIter exit without signature convergence means the star
@@ -257,7 +248,7 @@ object ConnectedComponents {
 
   /** Incremental transitive clustering over a COMMITTED components
     * snapshot — the companion to
-    * [[graft.matching.Matcher.matchPairsIncremental]]: when a new batch
+    * [[graft.matching.Matcher.incremental]]: when a new batch
     * of match edges lands, re-clustering the full edge history is
     * O(|E_all|); this is O(|V_old| + |E_new|).
     *

@@ -54,7 +54,7 @@ case class MatchConfig(
       * the other side's keys). "right" is the per-batch production
       * shape above; "left" is its mirror — a huge committed left
       * matched against a small right increment, the `old × new` leg of
-      * [[Matcher.matchPairsIncremental]]. The sketch must be built
+      * [[Matcher.incremental]]. The sketch must be built
       * over the SMALL side: building it over the big side would pay a
       * full extra scan of exactly the rows the pregate exists to
       * avoid touching. */
@@ -106,24 +106,93 @@ object MatchConfig {
   */
 object Matcher {
 
-  /** Inputs: `left`/`right` with (`idCol`, `textCol` [, lat, lon]).
-    * Output: matches (left_id, right_id, score), reference column order
-    * match.py:139. Text is assumed already normalized (the reference
-    * lower-cases in match.py:149-152; callers use Normalizer first). */
-  def matchPairs(
+  /** Match `left` against `right` with candidate generator `gen`:
+    * (left_id, right_id, score), reference column order match.py:139,
+    * top-k per left row. Text is assumed already normalized (the
+    * reference lower-cases in match.py:149-152; callers use Normalizer
+    * first). A lone [[CandidateGenerator.Block]] admits each pair once
+    * and ranks with [[rankTopK]]; every other generator can repeat a
+    * pair and ranks with [[rankTopKDistinct]]. */
+  def run(
+      gen: CandidateGenerator,
       left: DataFrame,
       right: DataFrame,
       cfg: MatchConfig,
       idCol: String = "id",
-      textCol: String = "text",
-      hasGeo: Boolean = false): DataFrame =
-    rankTopK(scoredPairs(left, right, cfg, idCol, textCol, hasGeo), cfg.topk)
+      textCol: String = "text"): DataFrame = {
+    val scored = gen.scored(left, right, cfg, idCol, textCol)
+    gen match {
+      case _: CandidateGenerator.Block => rankTopK(scored, cfg.topk)
+      case _ => rankTopKDistinct(scored, cfg.topk)
+    }
+  }
 
-  /** The scoring stage of [[matchPairs]] WITHOUT the final top-k
-    * ranking: every blocked candidate pair at or above the threshold,
-    * as (left_id, right_id, score). Exposed so incremental matching
-    * ([[matchPairsIncremental]]) can union score sets from several
-    * pair subspaces and rank ONCE over the union. */
+  /** Incremental re-match after an increment lands on either side —
+    * the production shape for a 10^12-turn corpus where matching runs
+    * per ingest batch: never re-score the old×old pair space, whose
+    * top-k is already committed as the prior `matches` snapshot.
+    *
+    * Exactly equivalent to `run(gen, leftOld ∪ leftNew,
+    * rightOld ∪ rightNew, cfg)` (property-tested in MatcherSpec for
+    * every pairwise generator): because candidacy is a per-pair
+    * property ([[PairwiseGenerator]]), the full candidate set splits
+    * into old×old ∪ new×all ∪ old×new, and for the old×old part the
+    * prior TOP-K is a sufficient summary — a pair ranked ≤ k in the
+    * full result ranks ≤ k within any subset it belongs to (fewer
+    * competitors), so every final winner from old×old is present in
+    * the prior snapshot; scores are deterministic, so re-ranking the
+    * union of the three score sets with the same (score desc,
+    * right_id asc) order reproduces the full ranking. Cost scales with
+    * the increment (|L_new|·blocked(R) + |L_old|·blocked(R_new)), not
+    * the corpus, and the prior snapshot contributes a scan, not a join.
+    * The position-dependent [[CandidateGenerator.SortedNeighborhood]]
+    * has no such decomposition and does not type-check here.
+    *
+    * `priorMatches` must be the committed `run(gen, leftOld, rightOld,
+    * cfg)` result (left_id, right_id, score) under the SAME generator
+    * and config — a different threshold/scorer/blocking would make the
+    * summary argument above unsound.
+    *
+    * Robust to a REPLAYED increment (rows of leftNew/rightNew already
+    * present in the old side — the at-least-once delivery case): the
+    * union then carries the same pair from two subspaces, and the
+    * ranking dedups pair repeats before counting top-k slots — even
+    * score-divergent repeats from an upserted payload collapse to one
+    * slot (see [[rankTopKDistinct]]; zero extra shuffle).
+    *
+    * With `cfg.bloomPregateItems > 0` the block legs' pregate is
+    * oriented PER LEG to match each leg's asymmetry — `new × all` thins
+    * the corpus by a sketch of the increment's keys
+    * (`bloomPregateSide = "right"`), while `old × new` flips to
+    * `"left"` so the sketch is built over the small right increment and
+    * thins the huge old left: both legs then scan-skip the committed
+    * corpus rows whose block key the increment never mentions, which
+    * is the dominant byte saving of incremental matching. LSH and
+    * set-sim legs never read the setting. */
+  def incremental(
+      gen: PairwiseGenerator,
+      leftOld: DataFrame,
+      leftNew: DataFrame,
+      rightOld: DataFrame,
+      rightNew: DataFrame,
+      priorMatches: DataFrame,
+      cfg: MatchConfig,
+      idCol: String = "id",
+      textCol: String = "text"): DataFrame = {
+    val newVsAll = gen.scored(leftNew, rightOld.unionByName(rightNew),
+      cfg.copy(bloomPregateSide = "right"), idCol, textCol)
+    val oldVsNew = gen.scored(leftOld, rightNew,
+      cfg.copy(bloomPregateSide = "left"), idCol, textCol)
+    rankTopKDistinct(
+      priorMatches.select(col("left_id"), col("right_id"), col("score"))
+        .unionByName(newVsAll)
+        .unionByName(oldVsNew),
+      cfg.topk)
+  }
+
+  /** The block-key generator's scoring stage
+    * ([[CandidateGenerator.Block]]): every blocked candidate pair at or
+    * above the threshold, as (left_id, right_id, score), not ranked. */
   def scoredPairs(
       left: DataFrame,
       right: DataFrame,
@@ -321,67 +390,6 @@ object Matcher {
       .select(col("left_id"), col("right_id"), col("score"))
   }
 
-  /** Incremental re-match after an increment lands on either side —
-    * the production shape for a 10^12-turn corpus where matching runs
-    * per ingest batch: never re-score the old×old pair space, whose
-    * top-k is already committed as the prior `matches` snapshot.
-    *
-    * Exactly equivalent to `matchPairs(leftOld ∪ leftNew,
-    * rightOld ∪ rightNew, cfg)` (property-tested in MatcherSpec):
-    * the full pair space splits into old×old ∪ new×all ∪ old×new, and
-    * for the old×old part the prior TOP-K is a sufficient summary — a
-    * pair ranked ≤ k in the full result ranks ≤ k within any subset it
-    * belongs to (fewer competitors), so every final winner from
-    * old×old is present in the prior snapshot; scores are
-    * deterministic, so re-ranking the union of the three score sets
-    * with the same (score desc, right_id asc) order reproduces the
-    * full ranking. Cost scales with the increment (|L_new|·blocked(R)
-    * + |L_old|·blocked(R_new)), not the corpus — at a daily-batch
-    * design point that is orders of magnitude below a full re-match,
-    * and the prior snapshot contributes a scan, not a join.
-    *
-    * `priorMatches` must be the committed `matchPairs(leftOld,
-    * rightOld, cfg)` result (left_id, right_id, score) under the SAME
-    * config — a different threshold/scorer/blocking would make the
-    * summary argument above unsound.
-    *
-    * Robust to a REPLAYED increment (rows of leftNew/rightNew already
-    * present in the old side — the at-least-once delivery case): the
-    * union then carries the same pair from two subspaces, and the
-    * ranking dedups pair repeats before counting top-k slots — even
-    * score-divergent repeats from an upserted payload collapse to one
-    * slot (see [[rankTopKDistinct]]; zero extra shuffle).
-    *
-    * With `cfg.bloomPregateItems > 0` the pregate is oriented PER LEG
-    * to match each leg's asymmetry — `new × all` thins the corpus by a
-    * sketch of the increment's keys (cfg's own side setting), while
-    * `old × new` flips to `bloomPregateSide = "left"` so the sketch is
-    * built over the small right increment and thins the huge old left:
-    * both legs then scan-skip the committed corpus rows whose block
-    * key the increment never mentions, which is the dominant byte
-    * saving of incremental matching. */
-  def matchPairsIncremental(
-      leftOld: DataFrame,
-      leftNew: DataFrame,
-      rightOld: DataFrame,
-      rightNew: DataFrame,
-      priorMatches: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      hasGeo: Boolean = false): DataFrame = {
-    val newVsAll = scoredPairs(
-      leftNew, rightOld.unionByName(rightNew),
-      cfg.copy(bloomPregateSide = "right"), idCol, textCol, hasGeo)
-    val oldVsNew = scoredPairs(
-      leftOld, rightNew,
-      cfg.copy(bloomPregateSide = "left"), idCol, textCol, hasGeo)
-    rankTopKDistinct(
-      priorMatches.select(col("left_id"), col("right_id"), col("score"))
-        .unionByName(newVsAll)
-        .unionByName(oldVsNew),
-      cfg.topk)
-  }
 
   /** [[rankTopK]] with a per-pair dedup folded into the ranking's
     * exchange: rows are first ordered by (right_id asc, score desc)
@@ -521,26 +529,9 @@ object Matcher {
     *
     * Oracle-checked end to end (`m_match_lsh` vs the
     * [[Dedup.minhashBandsSqlDuck]] mirror); rows shorter than
-    * `shingleK` have no shingles and generate no candidates (mirrored). */
-  def matchPairsLshBlocked(
-      left: DataFrame,
-      right: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char"): DataFrame =
-    rankTopKDistinct(
-      scoredPairsLshBlocked(left, right, cfg, idCol, textCol, shingleK, numHashes,
-        bands, shingleMode),
-      cfg.topk)
-
-  /** The scored-but-unranked LSH-banded candidate set (threshold
-    * applied; band-sharing repeats NOT collapsed — the ranking window
-    * does that). Exposed so [[matchPairsComposite]] can union it with
-    * the block-key candidate set. */
+    * `shingleK` have no shingles and generate no candidates (mirrored).
+    * Threshold applied; band-sharing repeats are NOT collapsed — the
+    * ranking window does that. */
   def scoredPairsLshBlocked(
       left: DataFrame,
       right: DataFrame,
@@ -631,116 +622,6 @@ object Matcher {
       .select(col("left_id"), col("right_id"), col("score"))
   }
 
-  /** [[matchPairsIncremental]] over the LSH-banded generator: the
-    * proof carries verbatim because a pair's candidacy (sharing ≥ 1
-    * band) depends only on its two rows' band keys — the LSH candidate
-    * set of (L_old ∪ L_new) × (R_old ∪ R_new) decomposes into exactly
-    * the same old×old ∪ new×all ∪ old×new subspaces, scores are
-    * deterministic, and the prior top-k summarizes old×old (top-k-in-
-    * full ⇒ top-k-in-subset). Replay/upsert repeats collapse in
-    * [[rankTopKDistinct]] as before. `priorMatches` must come from the
-    * SAME generator parameters (shingleK/numHashes/bands/shingleMode)
-    * and config. */
-  def matchPairsIncrementalLsh(
-      leftOld: DataFrame,
-      leftNew: DataFrame,
-      rightOld: DataFrame,
-      rightNew: DataFrame,
-      priorMatches: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char"): DataFrame = {
-    val newVsAll = scoredPairsLshBlocked(
-      leftNew, rightOld.unionByName(rightNew), cfg, idCol, textCol,
-      shingleK, numHashes, bands, shingleMode)
-    val oldVsNew = scoredPairsLshBlocked(
-      leftOld, rightNew, cfg, idCol, textCol,
-      shingleK, numHashes, bands, shingleMode)
-    rankTopKDistinct(
-      priorMatches.select(col("left_id"), col("right_id"), col("score"))
-        .unionByName(newVsAll)
-        .unionByName(oldVsNew),
-      cfg.topk)
-  }
-
-  /** COMPOSITE candidate generation — the north-star phrase made
-    * literal: candidates from the derived block key (`cfg.blockBy`)
-    * UNION candidates from MinHash-LSH banding, one ranking over both.
-    * The generators are complementary — prefix/digit keys anchor on
-    * the string head and never miss an exact-prefix pair regardless of
-    * overall similarity; banding anchors on whole-string shingle
-    * similarity and never misses a near-dup regardless of where it
-    * differs. A pair surfaced by both arrives with the SAME
-    * (deterministic) score and collapses to one top-k slot in
-    * [[rankTopKDistinct]] — no cross-generator dedup shuffle. Text
-    * corpora only (the LSH leg carries no geo columns): `hasGeo` stays
-    * false on both legs so the combine arithmetic is identical. */
-  def matchPairsComposite(
-      left: DataFrame,
-      right: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char"): DataFrame =
-    rankTopKDistinct(
-      scoredPairs(left, right, cfg, idCol, textCol, hasGeo = false)
-        .unionByName(scoredPairsLshBlocked(
-          left, right, cfg, idCol, textCol, shingleK, numHashes, bands, shingleMode)),
-      cfg.topk)
-
-  /** [[matchPairsIncremental]] over the COMPOSITE generator — the last
-    * cell of the generator × incremental matrix (block
-    * [[matchPairsIncremental]], banded [[matchPairsIncrementalLsh]],
-    * composite here). The proof composes: the composite candidate set
-    * is the union of two per-pair candidacy predicates (shared block
-    * key ∨ shared band), so it decomposes into the same old×old ∪
-    * new×all ∪ old×new subspaces per generator; `priorMatches` (a full
-    * composite match of the old halves) summarizes old×old for BOTH
-    * generators at once, and cross-generator + replay repeats collapse
-    * in [[rankTopKDistinct]] because scores are deterministic and
-    * generator-independent. Same leg-oriented bloom pregate flips as
-    * the block incremental; the LSH legs carry no block keys so the
-    * pregate never applies there. Text-only (composite semantics:
-    * hasGeo = false on the block legs, matching
-    * [[matchPairsComposite]]). */
-  def matchPairsIncrementalComposite(
-      leftOld: DataFrame,
-      leftNew: DataFrame,
-      rightOld: DataFrame,
-      rightNew: DataFrame,
-      priorMatches: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char"): DataFrame = {
-    val rightAll = rightOld.unionByName(rightNew)
-    val newVsAll = scoredPairs(
-      leftNew, rightAll, cfg.copy(bloomPregateSide = "right"),
-      idCol, textCol, hasGeo = false)
-      .unionByName(scoredPairsLshBlocked(leftNew, rightAll, cfg,
-        idCol, textCol, shingleK, numHashes, bands, shingleMode))
-    val oldVsNew = scoredPairs(
-      leftOld, rightNew, cfg.copy(bloomPregateSide = "left"),
-      idCol, textCol, hasGeo = false)
-      .unionByName(scoredPairsLshBlocked(leftOld, rightNew, cfg,
-        idCol, textCol, shingleK, numHashes, bands, shingleMode))
-    rankTopKDistinct(
-      priorMatches.select(col("left_id"), col("right_id"), col("score"))
-        .unionByName(newVsAll)
-        .unionByName(oldVsNew),
-      cfg.topk)
-  }
-
   /** Sorted-neighborhood (merge/purge, Hernández–Stolfo) candidate
     * generation: both sides are unioned, totally ordered by
     * (text, side, id) — a deterministic unique key — and every
@@ -764,18 +645,16 @@ object Matcher {
     * (window−1) probe positions against the index, both sides
     * repartitioned on the probe key (uniform by construction — index
     * values are unique, so this join CANNOT be skewed and needs no
-    * salting). No incremental variant: candidacy depends on a row's
-    * POSITION in the full sort, not on the pair alone, so the
-    * per-pair decomposition proof behind [[matchPairsIncremental]]
-    * does not exist for this generator. */
-  def scoredPairsSortedNeighborhood(
+    * salting). One pass per sort key of
+    * [[CandidateGenerator.SortedNeighborhood]]. */
+  private[matching] def scoredPairsSortedNeighborhood(
       left: DataFrame,
       right: DataFrame,
       cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      window: Int = 10,
-      sortKey: Column => Column = identity): DataFrame = {
+      idCol: String,
+      textCol: String,
+      window: Int,
+      sortKey: Column => Column): DataFrame = {
     require(window >= 2, s"window must be >= 2: $window")
     val parts = left.sparkSession.sessionState.conf.numShufflePartitions
     val scorer = FuzzFunctions.scorer(cfg.scorer)
@@ -812,47 +691,6 @@ object Matcher {
     scoreThresholdTextPairs(
       heavyRowCols(heavyRowCols(pairs, "left", cfg, preTok), "right", cfg, preTok),
       cfg, preTok, scorer)
-  }
-
-  /** [[scoredPairsSortedNeighborhood]] + the standard threshold/top-k
-    * ranking. A cross-side pair arises from at most one index
-    * distance, so there are no generator repeats; the distinct ranking
-    * is used anyway so replays compose like the other generators. */
-  def matchPairsSortedNeighborhood(
-      left: DataFrame,
-      right: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      window: Int = 10): DataFrame =
-    rankTopKDistinct(
-      scoredPairsSortedNeighborhood(left, right, cfg, idCol, textCol, window),
-      cfg.topk)
-
-  /** Multi-pass sorted neighborhood — the production merge/purge
-    * shape: one pass per sort key (e.g. the text itself, its reverse,
-    * a phonetic key), candidates unioned, ONE ranking. A true pair
-    * missed by one sort order (the two rows differ early in that key)
-    * is caught by a pass whose key they agree on early; a pair found
-    * by several passes carries the same deterministic score and
-    * collapses to one top-k slot in [[rankTopKDistinct]] — no
-    * cross-pass dedup shuffle, the same argument as
-    * [[matchPairsComposite]]. Cost is exactly `passes ×` the
-    * single-pass cost, still value-skew-proof. */
-  def matchPairsSortedNeighborhoodMultiPass(
-      left: DataFrame,
-      right: DataFrame,
-      cfg: MatchConfig,
-      sortKeys: Seq[Column => Column],
-      idCol: String = "id",
-      textCol: String = "text",
-      window: Int = 10): DataFrame = {
-    require(sortKeys.nonEmpty, "at least one sort key required")
-    rankTopKDistinct(
-      sortKeys.map(k =>
-        scoredPairsSortedNeighborhood(left, right, cfg, idCol, textCol, window, k))
-        .reduce(_ unionByName _),
-      cfg.topk)
   }
 
   /** Set-similarity candidate generation (J37): candidates = the EXACT
@@ -896,129 +734,6 @@ object Matcher {
     scoreThresholdTextPairs(
       cand.join(l, "left_id").join(r, "right_id"), cfg, preTok, scorer)
   }
-
-  /** FULL composite candidate generation — all three value-driven
-    * generator families in one ranking: derived block key
-    * ([[scoredPairs]]) ∪ MinHash-LSH bands ([[scoredPairsLshBlocked]])
-    * ∪ the exact set-similarity join ([[scoredPairsSetSimBlocked]]).
-    * The families fail independently (head edits beat prefix keys,
-    * band misses are probabilistic, sub-minSim token overlap evades
-    * the set join), so their union is the engine's highest-recall
-    * candidate set; pairs surfaced by several generators carry the
-    * SAME deterministic score and collapse to one top-k slot in
-    * [[rankTopKDistinct]] — no cross-generator dedup shuffle, the
-    * [[matchPairsComposite]] argument verbatim. Text corpora only
-    * (hasGeo stays false on every leg). */
-  def matchPairsCompositeFull(
-      left: DataFrame,
-      right: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char",
-      minSim: Double = 0.5,
-      sim: String = "jaccard"): DataFrame =
-    rankTopKDistinct(
-      scoredPairs(left, right, cfg, idCol, textCol, hasGeo = false)
-        .unionByName(scoredPairsLshBlocked(
-          left, right, cfg, idCol, textCol, shingleK, numHashes, bands, shingleMode))
-        .unionByName(scoredPairsSetSimBlocked(
-          left, right, cfg, idCol, textCol, minSim, sim)),
-      cfg.topk)
-
-  /** [[matchPairsIncremental]] over the set-sim generator — unlike
-    * sorted neighborhood, candidacy here IS per-pair: the generator's
-    * OUTPUT is exactly {(l, r) : sim(tokens_l, tokens_r) ≥ minSim}
-    * (J29's zero-false-negative bound makes the df-ordered prefix
-    * filter a pure pruning optimization — global token frequencies
-    * affect which candidates are VERIFIED, never which pairs emerge),
-    * so the subspace decomposition proof behind the block/LSH
-    * incrementals applies verbatim: new×all ∪ old×new scored fresh,
-    * the prior top-k summarizes old×old, one ranking; replay/upsert
-    * repeats carry identical deterministic scores and collapse in
-    * [[rankTopKDistinct]]. */
-  def matchPairsIncrementalSetSim(
-      leftOld: DataFrame,
-      leftNew: DataFrame,
-      rightOld: DataFrame,
-      rightNew: DataFrame,
-      priorMatches: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      minSim: Double = 0.5,
-      sim: String = "jaccard"): DataFrame = {
-    val newVsAll = scoredPairsSetSimBlocked(
-      leftNew, rightOld.unionByName(rightNew), cfg, idCol, textCol, minSim, sim)
-    val oldVsNew = scoredPairsSetSimBlocked(
-      leftOld, rightNew, cfg, idCol, textCol, minSim, sim)
-    rankTopKDistinct(
-      priorMatches.select(col("left_id"), col("right_id"), col("score"))
-        .unionByName(newVsAll)
-        .unionByName(oldVsNew),
-      cfg.topk)
-  }
-
-  /** [[matchPairsIncremental]] over the FULL three-generator composite
-    * ([[matchPairsCompositeFull]]) — closes the generator × incremental
-    * matrix. The proof composes exactly as
-    * [[matchPairsIncrementalComposite]]'s: candidacy is the union of
-    * THREE per-pair predicates (shared block key ∨ shared band ∨
-    * token-sim ≥ minSim — the set-sim leg's per-pair property argued in
-    * [[matchPairsIncrementalSetSim]]), so the subspace decomposition
-    * holds per generator, `priorMatches` (a full composite-full match
-    * of the old halves) summarizes old×old for all three at once, and
-    * cross-generator + replay repeats carry identical deterministic
-    * scores and collapse in [[rankTopKDistinct]]. Same leg-oriented
-    * bloom pregate flips on the block legs; text-only (hasGeo = false),
-    * matching the batch twin. */
-  def matchPairsIncrementalCompositeFull(
-      leftOld: DataFrame,
-      leftNew: DataFrame,
-      rightOld: DataFrame,
-      rightNew: DataFrame,
-      priorMatches: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char",
-      minSim: Double = 0.5,
-      sim: String = "jaccard"): DataFrame = {
-    val rightAll = rightOld.unionByName(rightNew)
-    def legs(l: DataFrame, r: DataFrame, pregate: String): DataFrame =
-      scoredPairs(l, r, cfg.copy(bloomPregateSide = pregate),
-        idCol, textCol, hasGeo = false)
-        .unionByName(scoredPairsLshBlocked(l, r, cfg, idCol, textCol,
-          shingleK, numHashes, bands, shingleMode))
-        .unionByName(scoredPairsSetSimBlocked(l, r, cfg, idCol, textCol,
-          minSim, sim))
-    rankTopKDistinct(
-      priorMatches.select(col("left_id"), col("right_id"), col("score"))
-        .unionByName(legs(leftNew, rightAll, "right"))
-        .unionByName(legs(leftOld, rightNew, "left")),
-      cfg.topk)
-  }
-
-  /** [[scoredPairsSetSimBlocked]] + the standard distinct top-k
-    * ranking (the J29 candidate set is already DISTINCT; the shared
-    * ranking keeps replay/composite composition uniform). */
-  def matchPairsSetSimBlocked(
-      left: DataFrame,
-      right: DataFrame,
-      cfg: MatchConfig,
-      idCol: String = "id",
-      textCol: String = "text",
-      minSim: Double = 0.5,
-      sim: String = "jaccard"): DataFrame =
-    rankTopKDistinct(
-      scoredPairsSetSimBlocked(left, right, cfg, idCol, textCol, minSim, sim),
-      cfg.topk)
 
   /** Blocking-quality statistics — the ER-canonical evaluation of a
     * candidate GENERATOR (before any scoring): given the generator's

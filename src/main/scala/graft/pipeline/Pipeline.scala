@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.cluster.ConnectedComponents
 import graft.io.TableIO
 import graft.matching.{FellegiSunter, MatchConfig, Matcher}
+import graft.matching.CandidateGenerator.Block
 import graft.normalize.Normalizer
 import graft.similarity.FuzzFunctions
 import graft.transcripts.Transcripts
@@ -31,7 +32,7 @@ import org.apache.spark.sql.functions._
   * `decision` picks how scored candidates become accepted matches:
   *
   *   - `"threshold"` (default) — the reference's hand-weighted combine
-  *     + fixed threshold/top-k ([[Matcher.matchPairs]]);
+  *     + fixed threshold/top-k (`Matcher.run(Block(), …)`);
   *   - `"fs"` — the LEARNED-weights path: per-pair comparison vectors
   *     from the configured generator ([[FellegiSunter.gammaPairs]],
   *     same block discipline and scorer as the threshold path),
@@ -66,7 +67,7 @@ object Pipeline {
       if (cfg.saltBuckets > 1 && cfg.knownHotKeys.isEmpty && cfg.knownHotKeysDf.isEmpty)
         cfg.copy(knownHotKeysDf = hotKeys)
       else cfg
-    Matcher.matchPairs(
+    Matcher.run(Block(),
       convNorm.filter(col("variant") === 0),
       convNorm.filter(col("variant") > 0),
       matchCfg, idCol = "conv_id", textCol = "text_norm")

@@ -207,8 +207,7 @@ object FuzzFunctions {
     * single-pass [[SortedTokenSet]] (the split/filter/distinct/sort HOF
     * chain was interpreted per element; property-tested identical). */
   def sortedTokenSet(c: Column): Column =
-    if (sys.env.get("GRAFT_FUSED_PREP").contains("0")) sortedTokenSetColumns(c)
-    else GraftShim.column(SortedTokenSet(GraftShim.expression(c)))
+    GraftShim.column(SortedTokenSet(GraftShim.expression(c)))
 
   /** The HOF-chain formulation of [[sortedTokenSet]] — spec oracle. */
   private[graft] def sortedTokenSetColumns(c: Column): Column = {

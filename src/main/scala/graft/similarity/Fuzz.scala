@@ -428,7 +428,9 @@ object Fuzz {
   }
 
   /** Levenshtein distance CLAMPED at `bound`: returns the exact
-    * distance when it is <= bound, else any value > bound (bound + 1).
+    * distance when it is <= bound, else exactly bound + 1 on every
+    * path (Myers, banded DP, non-ASCII fallback), so a sub-bound
+    * score never depends on which path computed it.
     * Semantics match Spark's built-in `levenshtein` (codepoint-based)
     * exactly in the <= bound regime — ASCII inputs take a banded
     * byte-DP (Ukkonen band of width 2*bound+1, per-row early exit);
@@ -442,13 +444,14 @@ object Fuzz {
   def levenshteinWithin(a: org.apache.spark.unsafe.types.UTF8String,
       b: org.apache.spark.unsafe.types.UTF8String, bound: Int): Int = {
     if (bound < 0) return 1 // degenerate caller: anything "exceeds"
+    def clamped(d: Int): Int = if (d > bound) bound + 1 else d
     // non-ASCII → Spark's own implementation (exact, unbanded)
     var q = 0
     val na = a.numBytes()
-    while (q < na) { if (a.getByte(q) < 0) return a.levenshteinDistance(b); q += 1 }
+    while (q < na) { if (a.getByte(q) < 0) return clamped(a.levenshteinDistance(b)); q += 1 }
     q = 0
     val nb = b.numBytes()
-    while (q < nb) { if (b.getByte(q) < 0) return a.levenshteinDistance(b); q += 1 }
+    while (q < nb) { if (b.getByte(q) < 0) return clamped(a.levenshteinDistance(b)); q += 1 }
     // ASCII: bytes == codepoints; banded two-row DP over (s = shorter
     // as columns, l = longer as rows)
     val (s, l) = if (na <= nb) (a, b) else (b, a)
@@ -461,8 +464,7 @@ object Fuzz {
     // instead of the banded DP's ~n·band cell ops; on ~60-char
     // normalized addresses that is ~10× fewer operations than the
     // band (which barely prunes at the match threshold's bound).
-    // Exact d satisfies the contract (d when ≤ bound, else > bound).
-    if (m <= 64) return levenshteinMyers64(s, l)
+    if (m <= 64) return clamped(levenshteinMyers64(s, l))
     val inf = bound + 1
     var prev = new Array[Int](m + 1)
     var cur = new Array[Int](m + 1)
@@ -493,7 +495,7 @@ object Fuzz {
       val t = prev; prev = cur; cur = t
       i += 1
     }
-    if (prev(m) > bound) bound + 1 else prev(m)
+    clamped(prev(m))
   }
 
   /** Per-thread scratch for [[levenshteinMyers64]]: 256 pattern

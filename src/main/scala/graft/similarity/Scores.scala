@@ -26,8 +26,7 @@ object Scores {
     * byte-pass expression ([[DigitRuns]]), exact for all UTF-8 input and
     * property-tested equal to the regexp_extract_all formulation. */
   def digitRuns(c: Column): Column =
-    if (sys.env.get("GRAFT_FUSED_PREP").contains("0")) digitRunsColumn(c)
-    else org.apache.spark.sql.GraftShim.column(
+    org.apache.spark.sql.GraftShim.column(
       DigitRuns(org.apache.spark.sql.GraftShim.expression(c)))
 
   /** The regex formulation of [[digitRuns]] — spec oracle. */

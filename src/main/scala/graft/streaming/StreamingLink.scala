@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.io.TableIO
-import graft.matching.{MatchConfig, Matcher}
+import graft.matching.{MatchConfig, Matcher, PairwiseGenerator}
+import graft.matching.CandidateGenerator.{Block, Lsh, SetSim, Union}
 import graft.cluster.ConnectedComponents
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -14,9 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   - `matches`: the current top-k linkage view. Per batch the new
   *     rows are scored against the (static, committed) left side and
   *     re-ranked together with the prior snapshot —
-  *     [[Matcher.matchPairsIncremental]] with an empty left increment,
-  *     so after the stream drains the table PROVABLY equals the batch
-  *     `matchPairs(left, allRights)` (subset-rank argument in that
+  *     [[Matcher.incremental]] with an empty left increment, so after
+  *     the stream drains the table PROVABLY equals the batch
+  *     `Matcher.run(gen, left, allRights)` (subset-rank argument in that
   *     scaladoc; pair replays collapse via
   *     [[Matcher.rankTopKDistinct]]). PRECONDITION: the stream is
   *     append-plus-replay — a re-delivered row carries the SAME
@@ -35,7 +36,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     view but never unmerges an entity — the standard ER
   *     accumulate-evidence semantics (you can't un-ship a merge
   *     downstream), and the shape incremental CC is exact for. The
-  *     batch equivalent is CC over `scoredPairs(left, allRights)`,
+  *     batch equivalent is CC over `gen.scored(left, allRights)`,
   *     NOT over the top-k'd match result.
   *
   * Scale shape: per batch the work is O(left-block ∩ batch) scoring +
@@ -48,17 +49,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * lineage: a replayed batch id re-commits idempotent content (pair
   * dedup + CC idempotence), never double-counts.
   *
-  * The candidate `generator` is pluggable — "block" (derived block
-  * key, J3), "lsh" (MinHash-LSH banding, J23), "composite" (block ∪
-  * bands, J24), "setsim" (the exact prefix-filtered set-similarity
-  * join, J37 — the generator with the provable recall floor) or
-  * "composite_full" (all three families in one ranking, J24b — the
-  * engine's highest-recall candidate set) — because the drain-equality
-  * proof only needs candidacy to be a per-pair property, which every
-  * one of these generators satisfies (the set-sim leg's per-pair
-  * argument is in [[Matcher.matchPairsIncrementalSetSim]]'s scaladoc:
-  * global token frequencies steer which candidates are VERIFIED,
-  * never which pairs emerge).
+  * The candidate `generator` is pluggable by name, resolved once per
+  * batch to a [[PairwiseGenerator]]: "block" → `Block(hasGeo)`
+  * (derived block key, J3), "lsh" → `Lsh()` (MinHash-LSH banding,
+  * J23), "setsim" → `SetSim()` (the exact prefix-filtered
+  * set-similarity join, J37 — the provable recall floor) or
+  * "composite_full" → `Union(Block(), Lsh(), SetSim())` (all three
+  * families in one ranking, J24b — the highest-recall candidate set).
+  * The drain-equality proof only needs candidacy to be a per-pair
+  * property, which is exactly what [[PairwiseGenerator]] promises.
   *
   * With `commitGolden = true` the sink also folds the SURVIVORSHIP
   * table per batch — `members` (every record seen, id-deduped) and
@@ -74,6 +73,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (n_split_components = 0, pair_recall ∈ {1.0, NULL}) alarm on state
   * corruption the moment a fold violates them. */
 object StreamingLink {
+
+  /** The sink's generator names. The composite is text-only: its block
+    * leg keeps `hasGeo = false` so the combine matches the batch
+    * `Matcher.run(Union(Block(), Lsh(), SetSim()), …)`. */
+  private def generatorNamed(name: String, hasGeo: Boolean): PairwiseGenerator =
+    name match {
+      case "block" => Block(hasGeo)
+      case "lsh" => Lsh()
+      case "setsim" => SetSim()
+      case "composite_full" => Union(Block(), Lsh(), SetSim())
+      case other => throw new IllegalArgumentException(
+        s"generator must be 'block', 'lsh', 'setsim' or 'composite_full': '$other'")
+    }
 
   /** Fold ONE micro-batch of right rows into the `matches` and
     * `clusters` snapshot tables under `root`. Exposed separately from
@@ -92,12 +104,6 @@ object StreamingLink {
       ccMaxIter: Int = 25,
       ccCheckEvery: Int = 1,
       generator: String = "block",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char",
-      minSim: Double = 0.5,
-      simKind: String = "jaccard",
       commitGolden: Boolean = false,
       commitDrift: Boolean = false): Unit = {
     if (batch.isEmpty) return
@@ -105,51 +111,19 @@ object StreamingLink {
     // The scored candidate set returns exactly (left_id, right_id,
     // score); it feeds both tables below — cut the plan once so the
     // candidate join runs one time per batch, not once per sink table.
-    // The drain-equality proof is generator-independent: block-key and
-    // band candidacy are both per-pair properties, so the union of
-    // per-batch candidate sets IS the full candidate set and replays
-    // collapse in the deterministic re-rank ([[Matcher
-    // .matchPairsIncrementalLsh]] scaladoc for the banded case).
+    // Candidacy is per-pair, so the union of per-batch candidate sets
+    // IS the full candidate set and replays collapse in the
+    // deterministic re-rank ([[Matcher.incremental]] scaladoc).
     //
-    // Block leg: huge-committed-LEFT × small-batch-RIGHT, so when the
-    // bloom pregate is on the sketch must be built over the BATCH and
-    // thin the corpus — the "left" orientation, same flip
-    // matchPairsIncremental applies to its old × new leg; inheriting
-    // the caller's per-ingest default ("right") would scan the whole
+    // Huge-committed-LEFT × small-batch-RIGHT, so when the bloom
+    // pregate is on the sketch must be built over the BATCH and thin
+    // the corpus — the "left" orientation, the same flip
+    // Matcher.incremental applies to its old × new leg; inheriting the
+    // caller's per-ingest default ("right") would scan the whole
     // corpus to build a sketch that thins the already-tiny batch.
-    // LSH/composite legs follow matchPairsLshBlocked /
-    // matchPairsComposite (text-only; composite forces hasGeo=false on
-    // the block leg so the combine arithmetic matches its batch twin).
-    val scoredMat = (generator match {
-      case "block" =>
-        Matcher.scoredPairs(left, batch, cfg.copy(bloomPregateSide = "left"),
-          idCol, textCol, hasGeo)
-      case "lsh" =>
-        Matcher.scoredPairsLshBlocked(left, batch, cfg, idCol, textCol,
-          shingleK, numHashes, bands, shingleMode)
-      case "composite" =>
-        Matcher.scoredPairs(left, batch, cfg.copy(bloomPregateSide = "left"),
-          idCol, textCol, hasGeo = false)
-          .unionByName(Matcher.scoredPairsLshBlocked(left, batch, cfg,
-            idCol, textCol, shingleK, numHashes, bands, shingleMode))
-      // the exact set-sim generator needs no pregate orientation: its
-      // candidate keys are each record's RAREST tokens under the df
-      // order computed over left ∪ batch, cold on both sides by
-      // construction (SetSimJoin scaladoc)
-      case "setsim" =>
-        Matcher.scoredPairsSetSimBlocked(left, batch, cfg,
-          idCol, textCol, minSim, simKind)
-      case "composite_full" =>
-        Matcher.scoredPairs(left, batch, cfg.copy(bloomPregateSide = "left"),
-          idCol, textCol, hasGeo = false)
-          .unionByName(Matcher.scoredPairsLshBlocked(left, batch, cfg,
-            idCol, textCol, shingleK, numHashes, bands, shingleMode))
-          .unionByName(Matcher.scoredPairsSetSimBlocked(left, batch, cfg,
-            idCol, textCol, minSim, simKind))
-      case other => throw new IllegalArgumentException(
-        "generator must be 'block', 'lsh', 'composite', 'setsim' or " +
-          s"'composite_full': '$other'")
-    }).localCheckpoint(true)
+    val scoredMat = generatorNamed(generator, hasGeo)
+      .scored(left, batch, cfg.copy(bloomPregateSide = "left"), idCol, textCol)
+      .localCheckpoint(true)
 
     val matches = TableIO.latestSnapshotId(root, "matches") match {
       case Some(_) =>
@@ -280,19 +254,11 @@ object StreamingLink {
       ccMaxIter: Int = 25,
       ccCheckEvery: Int = 1,
       generator: String = "block",
-      shingleK: Int = 5,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      shingleMode: String = "char",
-      minSim: Double = 0.5,
-      simKind: String = "jaccard",
       commitGolden: Boolean = false,
       commitDrift: Boolean = false): StreamingQuery = {
     val fold: (Dataset[Row], Long) => Unit = (batch, id) =>
       foldBatch(batch.toDF(), left, cfg, root, idCol, textCol, hasGeo, id,
-        keepSnapshots, ccMaxIter, ccCheckEvery,
-        generator, shingleK, numHashes, bands, shingleMode, minSim, simKind,
-        commitGolden, commitDrift)
+        keepSnapshots, ccMaxIter, ccCheckEvery, generator, commitGolden, commitDrift)
     rightStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(fold)

@@ -24,22 +24,17 @@ import org.apache.spark.sql.SparkSession
   * repartition exists to parallelize. The admin-sized conf is the
   * lower bound; the cores term only ever RAISES the count (a session
   * with more cores than the conf was sized for).
-  *
-  * `GRAFT_SPREAD_PARTS` / `GRAFT_JOIN_PARTS` override for diagnostics
-  * (BenchExtra A/B runs) only — production paths read the defaults.
   */
 object Parallelism {
 
   /** Partitions for compute-bound input spreading:
     * max(shuffle.partitions, 2 × session cores). */
   def spread(spark: SparkSession): Int =
-    sys.env.get("GRAFT_SPREAD_PARTS").map(_.toInt)
-      .getOrElse(math.max(spark.sessionState.conf.numShufflePartitions,
-        2 * spark.sparkContext.defaultParallelism))
+    math.max(spark.sessionState.conf.numShufflePartitions,
+      2 * spark.sparkContext.defaultParallelism)
 
   /** Partitions for exploding (block/band) join exchanges. */
   def explodingJoin(spark: SparkSession): Int =
-    sys.env.get("GRAFT_JOIN_PARTS").map(_.toInt)
-      .getOrElse(math.max(spark.sessionState.conf.numShufflePartitions,
-        2 * spark.sparkContext.defaultParallelism))
+    math.max(spark.sessionState.conf.numShufflePartitions,
+      2 * spark.sparkContext.defaultParallelism)
 }

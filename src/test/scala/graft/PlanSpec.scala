@@ -1,6 +1,7 @@
 package graft
 
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator._
 import graft.normalize.Normalizer
 import graft.fixtures.AddressFixture
 import org.apache.spark.sql.functions._
@@ -20,13 +21,42 @@ class PlanSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
   }
 
+  /** Every `BroadcastNestedLoopJoin` TREE line of a formatted plan with
+    * the output list of its build-side child, read from that child's
+    * `(N)` detail block (`Output [k]: [...]`, or `Input` for operators
+    * that print only their input). The build side is the second child
+    * for BuildRight, the first for BuildLeft; a node's children are the
+    * following tree lines whose branch marker (`+-` / `:-`) sits 3
+    * columns right of its own. */
+  private def bnljBuildOutputs(p: String): Seq[(String, Option[String])] = {
+    case class Node(line: String, col: Int, id: Int)
+    val tree = p.linesIterator.filterNot(_.startsWith("(")).flatMap { l =>
+      // AQE query stages append ", Statistics(...)" after the id
+      """ \((\d+)\)(, Statistics\(.*\))?$""".r.findFirstMatchIn(l).map { m =>
+        val name = l.indexWhere(_.isLetter)
+        Node(l.trim, l.lastIndexWhere(c => c == '+' || c == ':', name), m.group(1).toInt)
+      }
+    }.toVector
+    val details = p.split("\\n(?=\\(\\d+\\) )").flatMap { sec =>
+      """^\((\d+)\) """.r.findFirstMatchIn(sec).map(_.group(1).toInt -> sec)
+    }.toMap
+    def outputOf(id: Int): Option[String] = details.get(id).flatMap(
+      _.linesIterator.find(l => l.startsWith("Output [") || l.startsWith("Input ["))
+        .map(l => l.drop(l.indexOf(':') + 2)))
+    tree.zipWithIndex.collect { case (n, i) if n.line.contains("BroadcastNestedLoopJoin") =>
+      val kids = tree.drop(i + 1).takeWhile(_.col > n.col).filter(_.col == n.col + 3)
+      val build = if (n.line.contains("BuildLeft")) kids.headOption else kids.lastOption
+      n.line -> build.flatMap(b => outputOf(b.id))
+    }
+  }
+
   test("address match: scan pruned to c_custkey; no cartesian; scorer in codegen") {
-    val m = Matcher.matchPairs(
+    val m = Matcher.run(Block(hasGeo = true),
       SparkEntry.addrNorm(AddressFixture.left(spark, sf0001)),
       SparkEntry.addrNorm(AddressFixture.rightAll(spark, sf0001)),
       MatchConfig(scorer = "lev_ratio", threshold = 75, topk = 3,
         blockBy = "digits+prefix6", wDigits = 0.15, wGeo = 0.05),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+      idCol = "id", textCol = "address_norm")
     val p = plan(m)
     // column pruning: the parquet scan must read only c_custkey
     assert(p.contains("ReadSchema: struct<c_custkey:bigint>"), s"scan not pruned:\n$p")
@@ -93,13 +123,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bloom pregate plan: subquery sketch with partial agg, might_contain before the exchange") {
-    val m = Matcher.matchPairs(
+    val m = Matcher.run(Block(hasGeo = true),
       SparkEntry.addrNorm(AddressFixture.left(spark, sf0001)),
       SparkEntry.addrNorm(AddressFixture.rightAll(spark, sf0001)),
       MatchConfig(scorer = "lev_ratio", threshold = 75, topk = 3,
         blockBy = "digits+prefix6", wDigits = 0.15, wGeo = 0.05,
         bloomPregateItems = 4096L),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+      idCol = "id", textCol = "address_norm")
     val p = plan(m)
     // the sketch reaches the corpus filter as a scalar subquery (no
     // driver-side key set, no isin literal tree)
@@ -115,7 +145,7 @@ class PlanSpec extends SparkSpec {
 
   test("LSH-blocked match plan: no cartesian, no shingle arrays through the band shuffle") {
     val conv = SparkEntry.convNorm(spark, sf0001)
-    val m = Matcher.matchPairsLshBlocked(
+    val m = Matcher.run(Lsh(),
       conv.filter(col("variant") === 0),
       conv.filter(col("variant") > 0),
       MatchConfig.reference.copy(scorer = "jaro_winkler"),
@@ -153,22 +183,17 @@ class PlanSpec extends SparkSpec {
     // ids, never a nested-loop over the corpus. The ONE allowed
     // nested-loop shape is the broadcast 1-row corpus-count join that
     // makes the weights build lazy (r06, the AssignmentDrift
-    // metric-assembly pattern): every BNLJ node must build the
-    // broadcast (right) side, and the count column must be in the plan
-    // — a lost join key over the corpus would instead surface as a
-    // big-side nested loop or a CartesianProduct.
-    // tree lines only (detail-section headers "(N) BroadcastNested…"
-    // repeat each node without its build-side tag)
-    val bnlj = p.linesIterator
-      .filter(_.contains("BroadcastNestedLoopJoin"))
-      .filterNot(_.trim.startsWith("(")).toSeq
-    // the weights subplan appears once per side and AQE prints the
-    // final + initial plan, so the ONE count join surfaces as <= 4
-    // tree lines; more means an unrelated nested loop crept in
-    assert(bnlj.isEmpty ||
-      (bnlj.size <= 4 && p.contains("__n_docs") &&
-        bnlj.forall(_.contains("Cross BuildRight"))),
-      s"nested-loop join beyond the 1-row count in the enrich plan:\n$p")
+    // metric-assembly pattern): EVERY BNLJ tree line must be a
+    // `Cross BuildRight` whose build (last) child's `(N)` detail block
+    // outputs exactly the `__n_docs` count — a lost join key over the
+    // corpus would instead surface as a nested loop building anything
+    // else, or as a CartesianProduct.
+    val bnlj = bnljBuildOutputs(p)
+    info(s"${bnlj.size} nested-loop join tree lines")
+    assert(bnlj.forall { case (line, out) =>
+      line.contains("Cross BuildRight") && out.exists(_.matches("""\[__n_docs#\d+L?\]"""))
+    }, s"nested-loop join beyond the 1-row count in the enrich plan:\n" +
+      bnlj.mkString("\n") + s"\n$p")
     graft.util.CheckpointHygiene.free(pairs)
   }
 
@@ -185,7 +210,7 @@ class PlanSpec extends SparkSpec {
 
   test("salted match plan: hot keys broadcast-joined, no isin literals") {
     val conv = SparkEntry.convNorm(spark, sf0001)
-    val m = Matcher.matchPairs(
+    val m = Matcher.run(Block(),
       conv.filter(col("variant") === 0),
       conv.filter(col("variant") > 0),
       MatchConfig.reference.copy(saltBuckets = 4, saltHotPairs = 16L),

@@ -2,6 +2,7 @@ package graft.io
 
 import graft.SparkSpec
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator._
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -149,7 +150,7 @@ class PipelineSpec extends SparkSpec {
     // and the statistic-fed path is semantically identical to detection
     val lhs = convNorm.filter(col("variant") === 0)
     val rhs = convNorm.filter(col("variant") > 0)
-    val viaDetection = Matcher.matchPairs(lhs, rhs, cfg,
+    val viaDetection = Matcher.run(Block(), lhs, rhs, cfg,
       idCol = "conv_id", textCol = "text_norm")
     assert(m.exceptAll(viaDetection).isEmpty && viaDetection.exceptAll(m).isEmpty,
       "snapshot-statistic match differs from detection-path match")

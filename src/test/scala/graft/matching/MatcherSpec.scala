@@ -6,6 +6,7 @@ import graft.fixtures.AddressFixture
 import graft.normalize.Normalizer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import CandidateGenerator._
 
 /** E2E acceptance: the reference flow (normalize → block → match) on the
   * labeled address fixture reaches pairwise F1 >= 0.99 at the shared
@@ -26,8 +27,8 @@ class MatcherSpec extends SparkSpec {
   test("pairwise F1 >= 0.99 on labeled pairs at the shared blocking key") {
     val left = norm(AddressFixture.left(spark, sf001))
     val right = norm(AddressFixture.right(spark, sf001, 1))
-    val m = Matcher.matchPairs(left, right, cfg,
-      idCol = "id", textCol = "address_norm", hasGeo = true).cache()
+    val m = Matcher.run(Block(hasGeo = true), left, right, cfg,
+      idCol = "id", textCol = "address_norm").cache()
     val n = left.count()
     val tp = m.filter(col("right_id") === concat(lit("r"), col("left_id"))).count()
     val fp = m.count() - tp
@@ -49,8 +50,8 @@ class MatcherSpec extends SparkSpec {
       blockBy = "digits+prefix6", wDigits = 0.15, wGeo = 0.05, geoMaxKm = 1.5)
     val left = norm(AddressFixture.left(spark, sf0001))
     val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val got = Matcher.matchPairs(left, right, aCfg,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val got = Matcher.run(Block(hasGeo = true), left, right, aCfg,
+      idCol = "id", textCol = "address_norm")
     val bk = (c: org.apache.spark.sql.Column) => BlockKeys.blockKey(c, aCfg.blockBy)
     val joined = left.select(col("id").as("left_id"), col("address_norm").as("lt"),
         col("lat").as("llat"), col("lon").as("llon"), bk(col("address_norm")).as("bkey"))
@@ -78,68 +79,50 @@ class MatcherSpec extends SparkSpec {
   test("threshold monotonicity: higher threshold never adds matches") {
     val left = norm(AddressFixture.left(spark, sf0001))
     val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val lo = Matcher.matchPairs(left, right, cfg.copy(threshold = 60, topk = 5),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
-    val hi = Matcher.matchPairs(left, right, cfg.copy(threshold = 90, topk = 5),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val lo = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(threshold = 60, topk = 5),
+      idCol = "id", textCol = "address_norm")
+    val hi = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(threshold = 90, topk = 5),
+      idCol = "id", textCol = "address_norm")
     assert(hi.join(lo, Seq("left_id", "right_id"), "left_anti").count() == 0)
   }
 
   test("salting preserves exact match semantics") {
     val left = norm(AddressFixture.left(spark, sf0001))
     val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val plain = Matcher.matchPairs(left, right, cfg.copy(topk = 3),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val plain = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(topk = 3),
+      idCol = "id", textCol = "address_norm")
     // saltHotPairs = 1 forces EVERY key hot -> full replication path
-    val salted = Matcher.matchPairs(left, right,
+    val salted = Matcher.run(Block(hasGeo = true), left, right,
       cfg.copy(topk = 3, saltBuckets = 8, saltHotPairs = 1L),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+      idCol = "id", textCol = "address_norm")
     assert(plain.exceptAll(salted).count() == 0 && salted.exceptAll(plain).count() == 0)
     // default threshold: hot-key detection finds no hot keys on this
     // small fixture and the join degenerates to the plain path — still
     // exactly the same output
-    val adaptive = Matcher.matchPairs(left, right, cfg.copy(topk = 3, saltBuckets = 8),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val adaptive = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(topk = 3, saltBuckets = 8),
+      idCol = "id", textCol = "address_norm")
     assert(plain.exceptAll(adaptive).count() == 0 && adaptive.exceptAll(plain).count() == 0)
   }
 
   test("bloom pregate preserves exact match semantics (alone and composed with salting)") {
     val left = norm(AddressFixture.left(spark, sf0001))
     val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val plain = Matcher.matchPairs(left, right, cfg.copy(topk = 3),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
-    val bloomed = Matcher.matchPairs(left, right,
+    val plain = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(topk = 3),
+      idCol = "id", textCol = "address_norm")
+    val bloomed = Matcher.run(Block(hasGeo = true), left, right,
       cfg.copy(topk = 3, bloomPregateItems = 4096L),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+      idCol = "id", textCol = "address_norm")
     assert(plain.exceptAll(bloomed).count() == 0 && bloomed.exceptAll(plain).count() == 0)
-    val boths = Matcher.matchPairs(left, right,
+    val boths = Matcher.run(Block(hasGeo = true), left, right,
       cfg.copy(topk = 3, bloomPregateItems = 4096L, saltBuckets = 8, saltHotPairs = 1L),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+      idCol = "id", textCol = "address_norm")
     assert(plain.exceptAll(boths).count() == 0 && boths.exceptAll(plain).count() == 0)
     // mirrored orientation (left thinned by a sketch of right's keys —
     // the old×new incremental leg) must be just as invisible
-    val mirrored = Matcher.matchPairs(left, right,
+    val mirrored = Matcher.run(Block(hasGeo = true), left, right,
       cfg.copy(topk = 3, bloomPregateItems = 4096L, bloomPregateSide = "left"),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+      idCol = "id", textCol = "address_norm")
     assert(plain.exceptAll(mirrored).count() == 0 && mirrored.exceptAll(plain).count() == 0)
-  }
-
-  test("incremental match with bloom pregate equals full match") {
-    val left = norm(AddressFixture.left(spark, sf0001))
-    val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val c = cfg.copy(topk = 3, bloomPregateItems = 4096L)
-    val full = Matcher.matchPairs(left, right, c,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
-    val isOld = expr("CAST(regexp_extract(id, '([0-9]+)', 1) AS BIGINT) % 2 = 0")
-    val prior = Matcher.matchPairs(left.filter(isOld), right.filter(isOld), c,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
-    // per-leg pregate orientation (right for new×all, left for old×new)
-    // is internal to matchPairsIncremental — equality proves both legs
-    val incr = Matcher.matchPairsIncremental(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld), right.filter(not(isOld)),
-      prior, c, idCol = "id", textCol = "address_norm", hasGeo = true)
-    assert(full.exceptAll(incr).count() == 0 && incr.exceptAll(full).count() == 0)
   }
 
   test("bloom keyFilter: no false negatives, misses mostly excluded") {
@@ -161,9 +144,9 @@ class MatcherSpec extends SparkSpec {
     val left = conv.filter(col("variant") === 0)
     val right = conv.filter(col("variant") > 0)
     val c = MatchConfig.reference.copy(scorer = "jaro_winkler")
-    val lsh = Matcher.matchPairsLshBlocked(left, right, c,
+    val lsh = Matcher.run(Lsh(), left, right, c,
       idCol = "conv_id", textCol = "text_norm").cache()
-    val blocked = Matcher.matchPairs(left, right, c,
+    val blocked = Matcher.run(Block(), left, right, c,
       idCol = "conv_id", textCol = "text_norm").cache()
     def ent(x: org.apache.spark.sql.Column) = regexp_extract(x, "c([0-9]+)_", 1)
     val tpLsh = lsh.filter(ent(col("left_id")) === ent(col("right_id"))).count()
@@ -186,71 +169,19 @@ class MatcherSpec extends SparkSpec {
     val left = conv.filter(col("variant") === 0)
     val right = conv.filter(col("variant") > 0)
     val c = MatchConfig.reference.copy(scorer = "jaro_winkler")
-    val plain = Matcher.matchPairsLshBlocked(left, right, c,
+    val plain = Matcher.run(Lsh(), left, right, c,
       idCol = "conv_id", textCol = "text_norm")
     // saltHotPairs = 1 forces EVERY band hot -> full replication path
-    val salted = Matcher.matchPairsLshBlocked(left, right,
+    val salted = Matcher.run(Lsh(), left, right,
       c.copy(saltBuckets = 8, saltHotPairs = 1L),
       idCol = "conv_id", textCol = "text_norm")
     assert(plain.exceptAll(salted).count() == 0 && salted.exceptAll(plain).count() == 0)
     // default threshold: no band is hot on this fixture -> degenerates
     // to the plain path, still identical
-    val adaptive = Matcher.matchPairsLshBlocked(left, right,
+    val adaptive = Matcher.run(Lsh(), left, right,
       c.copy(saltBuckets = 8),
       idCol = "conv_id", textCol = "text_norm")
     assert(plain.exceptAll(adaptive).count() == 0 && adaptive.exceptAll(plain).count() == 0)
-  }
-
-  test("incremental LSH match equals full LSH match (incl. replayed increment)") {
-    val conv = graft.SparkEntry.convNorm(spark, sf0001).cache()
-    val left = conv.filter(col("variant") === 0)
-    val right = conv.filter(col("variant") > 0)
-    val c = MatchConfig.reference.copy(scorer = "jaro_winkler")
-    val full = Matcher.matchPairsLshBlocked(left, right, c,
-      idCol = "conv_id", textCol = "text_norm").cache()
-    val isOld = expr("CAST(regexp_extract(conv_id, 'c([0-9]+)_', 1) AS BIGINT) % 2 = 0")
-    val prior = Matcher.matchPairsLshBlocked(
-      left.filter(isOld), right.filter(isOld), c,
-      idCol = "conv_id", textCol = "text_norm")
-    val incr = Matcher.matchPairsIncrementalLsh(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld), right.filter(not(isOld)),
-      prior, c, idCol = "conv_id", textCol = "text_norm")
-    assert(full.exceptAll(incr).count() == 0 && incr.exceptAll(full).count() == 0)
-    // at-least-once replay: old rows re-delivered in the new batch
-    val replayed = Matcher.matchPairsIncrementalLsh(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld),
-      right.filter(not(isOld)).unionByName(right.filter(isOld).limit(20)),
-      prior, c, idCol = "conv_id", textCol = "text_norm")
-    assert(full.exceptAll(replayed).count() == 0 &&
-      replayed.exceptAll(full).count() == 0)
-  }
-
-  test("incremental composite match equals full composite match (incl. replay)") {
-    val conv = graft.SparkEntry.convNorm(spark, sf0001).cache()
-    val left = conv.filter(col("variant") === 0)
-    val right = conv.filter(col("variant") > 0)
-    val c = MatchConfig.reference.copy(scorer = "jaro_winkler")
-    val full = Matcher.matchPairsComposite(left, right, c,
-      idCol = "conv_id", textCol = "text_norm").cache()
-    val isOld = expr("CAST(regexp_extract(conv_id, 'c([0-9]+)_', 1) AS BIGINT) % 2 = 0")
-    val prior = Matcher.matchPairsComposite(
-      left.filter(isOld), right.filter(isOld), c,
-      idCol = "conv_id", textCol = "text_norm")
-    val incr = Matcher.matchPairsIncrementalComposite(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld), right.filter(not(isOld)),
-      prior, c, idCol = "conv_id", textCol = "text_norm")
-    assert(full.exceptAll(incr).count() == 0 && incr.exceptAll(full).count() == 0)
-    // at-least-once replay: old rows re-delivered in the new batch
-    val replayed = Matcher.matchPairsIncrementalComposite(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld),
-      right.filter(not(isOld)).unionByName(right.filter(isOld).limit(20)),
-      prior, c, idCol = "conv_id", textCol = "text_norm")
-    assert(full.exceptAll(replayed).count() == 0 &&
-      replayed.exceptAll(full).count() == 0)
   }
 
   test("sorted neighborhood: candidates monotone in window; no SinglePartition") {
@@ -258,10 +189,8 @@ class MatcherSpec extends SparkSpec {
     val left = conv.filter(col("variant") === 0)
     val right = conv.filter(col("variant") > 0)
     val c = MatchConfig.reference.copy(scorer = "jaro_winkler")
-    val s5 = Matcher.scoredPairsSortedNeighborhood(
-      left, right, c, "conv_id", "text_norm", window = 5)
-    val s20 = Matcher.scoredPairsSortedNeighborhood(
-      left, right, c, "conv_id", "text_norm", window = 20)
+    val s5 = SortedNeighborhood(5).scored(left, right, c, "conv_id", "text_norm")
+    val s20 = SortedNeighborhood(20).scored(left, right, c, "conv_id", "text_norm")
     // a pair within 4 positions is within 19 positions: strictly wider net
     assert(s5.exceptAll(s20).count() == 0)
     assert(s5.count() < s20.count())
@@ -269,27 +198,22 @@ class MatcherSpec extends SparkSpec {
     // is the regression guard for the rankByRange boundary-sample pin
     // (unpinned, two copies of the index sample different range
     // boundaries and the same call returns different pair sets)
-    val s5b = Matcher.scoredPairsSortedNeighborhood(
-      left, right, c, "conv_id", "text_norm", window = 5)
+    val s5b = SortedNeighborhood(5).scored(left, right, c, "conv_id", "text_norm")
     assert(s5.exceptAll(s5b).count() == 0 && s5b.exceptAll(s5).count() == 0)
     // the global index must come from the triangular-offset numbering,
     // never a SinglePartition window (the matchIndex discipline)
-    val ranked = Matcher.matchPairsSortedNeighborhood(
+    val ranked = Matcher.run(SortedNeighborhood(),
       left, right, c, "conv_id", "text_norm")
     assert(!ranked.queryExecution.executedPlan.toString.contains("SinglePartition"))
     assert(ranked.count() > 0)
     // multi-pass: forward ∪ reversed candidates strictly widen the
     // single-pass net (scored sets, pre-ranking)
-    val mp = Matcher.scoredPairsSortedNeighborhood(
-        left, right, c, "conv_id", "text_norm", window = 5)
-      .unionByName(Matcher.scoredPairsSortedNeighborhood(
-        left, right, c, "conv_id", "text_norm", window = 5,
-        sortKey = (x: org.apache.spark.sql.Column) => reverse(x)))
+    val multiPass = SortedNeighborhood(5,
+      Seq(identity, (x: org.apache.spark.sql.Column) => reverse(x)))
+    val mp = multiPass.scored(left, right, c, "conv_id", "text_norm")
     assert(s5.exceptAll(mp).count() == 0)
-    val mpRanked = Matcher.matchPairsSortedNeighborhoodMultiPass(
-      left, right, c,
-      sortKeys = Seq(identity, (x: org.apache.spark.sql.Column) => reverse(x)),
-      idCol = "conv_id", textCol = "text_norm", window = 5)
+    val mpRanked = Matcher.run(multiPass, left, right, c,
+      idCol = "conv_id", textCol = "text_norm")
     assert(mpRanked.count() >= 0)
   }
 
@@ -300,9 +224,9 @@ class MatcherSpec extends SparkSpec {
     val c = MatchConfig.reference.copy(scorer = "jaro_winkler")
     def ent(x: org.apache.spark.sql.Column) = regexp_extract(x, "c([0-9]+)_", 1)
     def tp(df: DataFrame) = df.filter(ent(col("left_id")) === ent(col("right_id"))).count()
-    val block = Matcher.matchPairs(left, right, c, idCol = "conv_id", textCol = "text_norm")
-    val lsh = Matcher.matchPairsLshBlocked(left, right, c, idCol = "conv_id", textCol = "text_norm")
-    val comp = Matcher.matchPairsComposite(left, right, c,
+    val block = Matcher.run(Block(), left, right, c, idCol = "conv_id", textCol = "text_norm")
+    val lsh = Matcher.run(Lsh(), left, right, c, idCol = "conv_id", textCol = "text_norm")
+    val comp = Matcher.run(Union(Block(), Lsh()), left, right, c,
       idCol = "conv_id", textCol = "text_norm").cache()
     val (tpB, tpL, tpC) = (tp(block), tp(lsh), tp(comp))
     info(s"true pairs: block=$tpB lsh=$tpL composite=$tpC")
@@ -320,37 +244,75 @@ class MatcherSpec extends SparkSpec {
     assert(comp.join(unionScored, Seq("left_id", "right_id"), "left_anti").count() == 0)
   }
 
-  test("incremental match equals full match (salted; and empty increment = prior)") {
-    val left = norm(AddressFixture.left(spark, sf0001))
-    val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val c = cfg.copy(topk = 3, saltBuckets = 8, saltHotPairs = 1L)
-    val full = Matcher.matchPairs(left, right, c,
-      idCol = "id", textCol = "address_norm", hasGeo = true).cache()
-    val isOld = expr("CAST(regexp_extract(id, '([0-9]+)', 1) AS BIGINT) % 2 = 0")
-    val prior = Matcher.matchPairs(left.filter(isOld), right.filter(isOld), c,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
-    val incr = Matcher.matchPairsIncremental(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld), right.filter(not(isOld)),
-      prior, c, idCol = "id", textCol = "address_norm", hasGeo = true)
-    assert(full.exceptAll(incr).count() == 0 && incr.exceptAll(full).count() == 0)
-    // empty increment: re-ranking the prior alone must be a no-op
-    val incrEmpty = Matcher.matchPairsIncremental(
-      left, left.limit(0), right, right.limit(0), full, c,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
-    assert(full.exceptAll(incrEmpty).count() == 0 &&
-      incrEmpty.exceptAll(full).count() == 0)
-    // REPLAYED increment (at-least-once delivery): rows already in the
-    // old side re-arrive in the new batch — the pair-repeat dedup in
-    // the ranking must keep the result identical to the full match
-    val replayed = Matcher.matchPairsIncremental(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld),
-      right.filter(not(isOld)).unionByName(right.filter(isOld).limit(20)),
-      prior, c, idCol = "id", textCol = "address_norm", hasGeo = true)
-    assert(full.exceptAll(replayed).count() == 0 &&
-      replayed.exceptAll(full).count() == 0)
+  /** One "incremental equals full" check per pairwise generator: the
+    * fold of prior(old×old) + new×all + old×new must equal the full
+    * match for a fresh increment, a REPLAYED increment (old right rows
+    * re-delivered — at-least-once delivery) and an EMPTY increment
+    * (re-ranking the prior alone is a no-op), under every listed
+    * config. The Bloom config exercises the per-leg pregate flip inside
+    * [[Matcher.incremental]] (right on new×all, left on old×new); the
+    * salted config forces every block key hot (full replication). */
+  private case class IncrCase(
+      gen: PairwiseGenerator, addresses: Boolean, cfgs: Seq[MatchConfig])
+
+  private val jw = MatchConfig.reference.copy(scorer = "jaro_winkler")
+  private def byGen(name: String) = s"incremental equals full: $name"
+  // the two Block rows keep their long-standing test names
+  private val incrCases = Seq(
+    "incremental match equals full match (salted; and empty increment = prior)" ->
+      IncrCase(Block(hasGeo = true), addresses = true,
+        Seq(cfg.copy(topk = 3, saltBuckets = 8, saltHotPairs = 1L))),
+    "incremental match with bloom pregate equals full match" ->
+      IncrCase(Block(hasGeo = true), addresses = true,
+        Seq(cfg.copy(topk = 3, bloomPregateItems = 4096L))),
+    byGen("Lsh") -> IncrCase(Lsh(), addresses = false, Seq(jw)),
+    byGen("SetSim") -> IncrCase(SetSim(), addresses = false, Seq(jw)),
+    byGen("Union(Block, Lsh)") -> IncrCase(Union(Block(), Lsh()), addresses = false, Seq(jw)),
+    byGen("Union(Block, Lsh, SetSim)") -> IncrCase(Union(Block(), Lsh(), SetSim()),
+      addresses = false, Seq(jw)))
+
+  for ((name, ic) <- incrCases) test(name) {
+    // old/new split by entity-number parity
+    val (left, right, idCol, textCol, entity) =
+      if (ic.addresses)
+        (norm(AddressFixture.left(spark, sf0001)),
+          norm(AddressFixture.rightAll(spark, sf0001)), "id", "address_norm", "([0-9]+)")
+      else {
+        val conv = graft.SparkEntry.convNorm(spark, sf0001).cache()
+        (conv.filter(col("variant") === 0), conv.filter(col("variant") > 0),
+          "conv_id", "text_norm", "c([0-9]+)_")
+      }
+    val isOld = expr(s"CAST(regexp_extract($idCol, '$entity', 1) AS BIGINT) % 2 = 0")
+    // each side evaluated once; equal as multisets of rows
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
+    for (c <- ic.cfgs) {
+      val full = Matcher.run(ic.gen, left, right, c, idCol, textCol).cache()
+      val fullRows = rows(full)
+      def same(fold: DataFrame, what: String): Unit =
+        assert(rows(fold) == fullRows, s"$name: $what")
+      val prior = Matcher.run(ic.gen, left.filter(isOld), right.filter(isOld), c,
+        idCol, textCol).cache()
+      def fold(rightNew: DataFrame) = Matcher.incremental(ic.gen,
+        left.filter(isOld), left.filter(not(isOld)), right.filter(isOld), rightNew,
+        prior, c, idCol, textCol)
+      same(fold(right.filter(not(isOld))), s"fresh increment under $c")
+      same(fold(right.filter(not(isOld)).unionByName(right.filter(isOld).limit(20))),
+        s"replayed increment under $c")
+      same(Matcher.incremental(ic.gen, left, left.limit(0), right, right.limit(0),
+        full, c, idCol, textCol), s"empty increment under $c")
+      assert(fullRows.nonEmpty, s"$name: fixture produced no matches")
+      prior.unpersist(); full.unpersist()
+    }
   }
+
+  test("incremental accepts only pairwise generators") {
+    val df = spark.range(1).selectExpr("CAST(id AS STRING) AS id", "'a' AS text")
+    assertCompiles("Matcher.incremental(Union(Block(), Lsh()), df, df, df, df, df, cfg)")
+    // candidacy of a sorted neighborhood depends on row POSITION, so
+    // the old×old ∪ new×all ∪ old×new decomposition does not exist
+    assertTypeError("Matcher.incremental(SortedNeighborhood(), df, df, df, df, df, cfg)")
+  }
+
 
   test("rankTopKDistinct collapses score-divergent pair repeats to one slot") {
     // upsert shape: the same (left, right) pair scored under two payload
@@ -372,8 +334,8 @@ class MatcherSpec extends SparkSpec {
   test("transitive clustering recovers latent entities (size-3 clusters)") {
     val left = norm(AddressFixture.left(spark, sf0001))
     val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val m = Matcher.matchPairs(left, right, cfg.copy(topk = 2),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val m = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(topk = 2),
+      idCol = "id", textCol = "address_norm")
     val clusters = ConnectedComponents.run(m, "left_id", "right_id").cache()
     val n = left.count()
     // every entity k forms exactly the cluster {k, rk, sk} rooted at k
@@ -388,8 +350,8 @@ class MatcherSpec extends SparkSpec {
   test("unmatched anti-joins partition the inputs") {
     val left = norm(AddressFixture.left(spark, sf0001))
     val right = norm(AddressFixture.rightAll(spark, sf0001))
-    val m = Matcher.matchPairs(left, right, cfg.copy(topk = 2),
-      idCol = "id", textCol = "address_norm", hasGeo = true).cache()
+    val m = Matcher.run(Block(hasGeo = true), left, right, cfg.copy(topk = 2),
+      idCol = "id", textCol = "address_norm").cache()
     val ul = Matcher.unmatchedLeft(left, m, "id")
     val ur = Matcher.unmatchedRight(right, m, "id")
     assert(ul.count() + m.select("left_id").distinct().count() == left.count())
@@ -417,16 +379,16 @@ class MatcherSpec extends SparkSpec {
       textCol = "address_norm")
     val lb = spark.table("bkt_left")
     val rb = spark.table("bkt_right")
-    val m = Matcher.matchPairs(lb, rb, c.copy(coPartitioned = true),
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val m = Matcher.run(Block(hasGeo = true), lb, rb, c.copy(coPartitioned = true),
+      idCol = "id", textCol = "address_norm")
     m.collect()
     val plan = m.queryExecution.executedPlan.toString
     val joinSection = plan.split("Window").head // exchanges before the top-k window are the join's
     assert(!joinSection.contains("Exchange hashpartitioning(block_key"),
       s"bucketed join still exchanges on block_key:\n$plan")
     // results identical to the shuffled path
-    val plain = Matcher.matchPairs(left, right, c,
-      idCol = "id", textCol = "address_norm", hasGeo = true)
+    val plain = Matcher.run(Block(hasGeo = true), left, right, c,
+      idCol = "id", textCol = "address_norm")
     assert(m.exceptAll(plain).count() == 0 && plain.exceptAll(m).count() == 0)
     spark.sql("DROP TABLE IF EXISTS bkt_left")
     spark.sql("DROP TABLE IF EXISTS bkt_right")

@@ -3,11 +3,13 @@ package graft.matching
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import CandidateGenerator._
 
 /** Set-similarity candidate generation for the matcher (J37):
   * exact equivalence against a brute-force reference (single-bucket
   * cross scoring restricted to the pairs whose token Jaccard clears
-  * minSim), plus partitioning invariance. */
+  * minSim), plus partitioning invariance. Incremental equality is in
+  * MatcherSpec's per-generator table. */
 class SetSimMatchSpec extends SparkSpec {
 
   private val cfg = MatchConfig.reference.copy(scorer = "jaro_winkler")
@@ -23,8 +25,8 @@ class SetSimMatchSpec extends SparkSpec {
     val df = conv(sf0001)
     val left = df.filter(col("variant") === 0)
     val right = df.filter(col("variant") > 0)
-    val actual = Matcher.matchPairsSetSimBlocked(
-      left, right, cfg, idCol = "conv_id", textCol = "text_norm", minSim = minSim)
+    val actual = Matcher.run(SetSim(minSim = minSim),
+      left, right, cfg, idCol = "conv_id", textCol = "text_norm")
     // brute: score EVERY cross pair (blockBy="" = single bucket), keep
     // those whose exact token Jaccard >= minSim, rank the survivors
     val allScored = Matcher.scoredPairs(
@@ -49,44 +51,19 @@ class SetSimMatchSpec extends SparkSpec {
     assert(a.toSeq == e.toSeq)
   }
 
-  test("incremental set-sim match equals full match (incl. replayed increment)") {
-    val df = conv(sf0001)
-    val left = df.filter(col("variant") === 0)
-    val right = df.filter(col("variant") > 0)
-    val full = Matcher.matchPairsSetSimBlocked(
-      left, right, cfg, idCol = "conv_id", textCol = "text_norm", minSim = minSim).cache()
-    val isOld = expr("CAST(regexp_extract(conv_id, 'c([0-9]+)_', 1) AS BIGINT) % 2 = 0")
-    val prior = Matcher.matchPairsSetSimBlocked(
-      left.filter(isOld), right.filter(isOld), cfg,
-      idCol = "conv_id", textCol = "text_norm", minSim = minSim)
-    val incr = Matcher.matchPairsIncrementalSetSim(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld), right.filter(not(isOld)),
-      prior, cfg, idCol = "conv_id", textCol = "text_norm", minSim = minSim)
-    assert(full.exceptAll(incr).count() == 0 && incr.exceptAll(full).count() == 0)
-    // at-least-once replay: old rows re-delivered in the new batch
-    val replayed = Matcher.matchPairsIncrementalSetSim(
-      left.filter(isOld), left.filter(not(isOld)),
-      right.filter(isOld),
-      right.filter(not(isOld)).unionByName(right.filter(isOld).limit(20)),
-      prior, cfg, idCol = "conv_id", textCol = "text_norm", minSim = minSim)
-    assert(full.exceptAll(replayed).count() == 0 &&
-      replayed.exceptAll(full).count() == 0)
-  }
-
   test("full composite: per-left best score dominates every single generator") {
     val df = conv(sf0001)
     val left = df.filter(col("variant") === 0)
     val right = df.filter(col("variant") > 0)
     def best(m: org.apache.spark.sql.DataFrame) =
       m.groupBy("left_id").agg(max("score").as("s"))
-    val comp3 = best(Matcher.matchPairsCompositeFull(
+    val comp3 = best(Matcher.run(Union(Block(), Lsh(), SetSim()),
       left, right, cfg, idCol = "conv_id", textCol = "text_norm")).cache()
     val singles = Seq(
-      Matcher.matchPairs(left, right, cfg, idCol = "conv_id", textCol = "text_norm"),
-      Matcher.matchPairsLshBlocked(left, right, cfg, idCol = "conv_id", textCol = "text_norm"),
-      Matcher.matchPairsSetSimBlocked(left, right, cfg,
-        idCol = "conv_id", textCol = "text_norm", minSim = minSim))
+      Matcher.run(Block(), left, right, cfg, idCol = "conv_id", textCol = "text_norm"),
+      Matcher.run(Lsh(), left, right, cfg, idCol = "conv_id", textCol = "text_norm"),
+      Matcher.run(SetSim(minSim = minSim), left, right, cfg,
+        idCol = "conv_id", textCol = "text_norm"))
     // the composite ranks over a candidate SUPERSET of each generator,
     // so per left_id its best score can never be lower
     singles.foreach { m =>
@@ -100,10 +77,10 @@ class SetSimMatchSpec extends SparkSpec {
 
   test("partitioning invariance") {
     val df = conv(sf0001)
-    def run(n: Int) = Matcher.matchPairsSetSimBlocked(
+    def run(n: Int) = Matcher.run(SetSim(minSim = minSim),
       df.filter(col("variant") === 0).repartition(n),
       df.filter(col("variant") > 0).repartition(n + 3),
-      cfg, idCol = "conv_id", textCol = "text_norm", minSim = minSim)
+      cfg, idCol = "conv_id", textCol = "text_norm")
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).sortBy(_.toString)
     assert(run(3).toSeq == run(13).toSeq)
   }

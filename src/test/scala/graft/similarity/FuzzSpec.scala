@@ -251,8 +251,20 @@ class FuzzSpec extends SparkSpec {
     check(Prop.forAll(str, str, Gen.chooseNum(0, 100)) { (a, b, bound) =>
       val ref = levNaive(a, b)
       val got = Fuzz.levenshteinWithin(utf8(a), utf8(b), bound)
-      if (ref <= bound) got == ref else got > bound
+      if (ref <= bound) got == ref else got == bound + 1
     })
+  }
+
+  test("levenshteinWithin clamps to exactly bound + 1 on both sides of 64 chars") {
+    // within-bound length gap, so neither call takes the length
+    // early-exit: the 60-char pattern runs Myers, the 70-char one the
+    // banded DP, and both must report the same clamped value
+    for ((m, n) <- Seq((60, 62), (70, 72))) {
+      val a = "a" * m
+      val b = "b" * n
+      assert(levNaive(a, b) == n)
+      assert(Fuzz.levenshteinWithin(utf8(a), utf8(b), 10) == 11, s"m=$m n=$n")
+    }
   }
 
   test("property: levRatioBounded exact at/above minText, safely below otherwise") {

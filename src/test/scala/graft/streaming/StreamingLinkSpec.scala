@@ -5,6 +5,7 @@ import graft.cluster.ConnectedComponents
 import graft.fixtures.AddressFixture
 import graft.io.TableIO
 import graft.matching.{MatchConfig, Matcher}
+import graft.matching.CandidateGenerator._
 import graft.normalize.Normalizer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -65,12 +66,12 @@ class StreamingLinkSpec extends SparkSpec {
       }
     } finally q.stop()
 
-    val expectedM = Matcher.matchPairs(left, norm(rightAll), cfg,
+    val expectedM = Matcher.run(Block(), left, norm(rightAll), cfg,
       idCol = "id", textCol = "address_norm")
     val gotM = TableIO.readTable(spark, root, "matches")
     assert(gotM.exceptAll(expectedM).count() == 0 &&
       expectedM.exceptAll(gotM).count() == 0,
-      "streamed matches != batch matchPairs")
+      "streamed matches != batch Matcher.run(Block())")
 
     // monotone-merge semantics: clusters over ALL accepted scored
     // pairs (not the top-k'd view) — see StreamingLink scaladoc
@@ -106,12 +107,12 @@ class StreamingLinkSpec extends SparkSpec {
       }
     } finally q.stop()
 
-    val expectedM = Matcher.matchPairsLshBlocked(left, norm(rightAll), cLsh,
+    val expectedM = Matcher.run(Lsh(), left, norm(rightAll), cLsh,
       idCol = "id", textCol = "address_norm")
     val gotM = TableIO.readTable(spark, root, "matches")
     assert(gotM.exceptAll(expectedM).count() == 0 &&
       expectedM.exceptAll(gotM).count() == 0,
-      "streamed LSH matches != batch matchPairsLshBlocked")
+      "streamed LSH matches != batch Matcher.run(Lsh())")
 
     val expectedC = ConnectedComponents.run(
       Matcher.scoredPairsLshBlocked(left, norm(rightAll), cLsh,
@@ -147,12 +148,12 @@ class StreamingLinkSpec extends SparkSpec {
 
     // batch twin: the full three-generator composite ranking — the
     // sink can now run the engine's highest-recall candidate set
-    val expectedM = Matcher.matchPairsCompositeFull(left, norm(rightAll), cJw,
+    val expectedM = Matcher.run(Union(Block(), Lsh(), SetSim()), left, norm(rightAll), cJw,
       idCol = "id", textCol = "address_norm")
     val gotM = TableIO.readTable(spark, root, "matches")
     assert(gotM.exceptAll(expectedM).count() == 0 &&
       expectedM.exceptAll(gotM).count() == 0,
-      "streamed composite_full matches != batch matchPairsCompositeFull")
+      "streamed composite_full matches != batch Matcher.run(Union(Block(), Lsh(), SetSim()))")
 
     val expectedC = ConnectedComponents.run(
       Matcher.scoredPairs(left, norm(rightAll), cJw,
@@ -291,11 +292,11 @@ class StreamingLinkSpec extends SparkSpec {
       }
     } finally q.stop()
 
-    val expectedM = Matcher.matchPairsSetSimBlocked(left, norm(rightAll), cJw,
+    val expectedM = Matcher.run(SetSim(), left, norm(rightAll), cJw,
       idCol = "id", textCol = "address_norm")
     val gotM = TableIO.readTable(spark, root, "matches")
     assert(gotM.exceptAll(expectedM).count() == 0 &&
       expectedM.exceptAll(gotM).count() == 0,
-      "streamed setsim matches != batch matchPairsSetSimBlocked")
+      "streamed setsim matches != batch Matcher.run(SetSim())")
   }
 }
